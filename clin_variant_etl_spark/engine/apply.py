@@ -2,7 +2,7 @@
 
 The pipeline per epoch (SURVEY.md §7.2 step 3-8):
 
-  events ──▶ salted two-phase dedup (keep-max-LSN per doc_id)        [skew-proof]
+  events ──▶ keep-max-LSN dedup per doc_id (engine/dedup.py auto)   [skew-proof]
          ──▶ bucket pruning (only buckets with changes are touched)  [merge ∝ delta]
          ──▶ full-outer join vs the touched bucket slice, LSN guard  [late events]
          ──▶ rewrite touched buckets + atomic snapshot commit        [exactly-once]
@@ -42,7 +42,6 @@ than the delete stays dead (SURVEY.md §7.4 hard part #1).  Compaction
 from __future__ import annotations
 
 import math
-import os
 import time
 from dataclasses import dataclass
 
@@ -58,7 +57,7 @@ from ..schemas import (
     merge_schemas,
     same_shape,
 )
-from .dedup import latest_by_key_auto, latest_by_key_join, latest_by_key_salted
+from .dedup import latest_by_key_auto, latest_by_key_salted
 
 EVENT_META_COLS = ("lsn", "op", "event_ts", "epoch_hint")
 BUCKET_PARTITION = "bucket"
@@ -113,10 +112,6 @@ def _aligned_partition_count(
       proxy for write work.
     """
     k = max(1, math.ceil(parallelism / n_buckets))
-    # SPARK_GRAFT_DISABLE_SKEW_GUARD=1: bench A/B knob (scripts/skew_bench.py
-    # measures the guard's effect with it off vs on) — not a production switch
-    if os.environ.get("SPARK_GRAFT_DISABLE_SKEW_GUARD") == "1":
-        return n_buckets * k
     if net_count > 0 and bucket_keys:
         share = max(bucket_keys) / net_count
         if share > 1.5 / n_buckets:
@@ -172,7 +167,6 @@ class CdcPipeline:
         key_col: str = "doc_id",
         n_salts: int = 8,
         collect_part_stats: bool = False,
-        dedup_variant: str = "auto",
         debug_checks: bool = False,
         apply_mode: str = "cow",
         broadcast_max_rows: int | None = 4_000_000,
@@ -188,19 +182,12 @@ class CdcPipeline:
         if apply_mode not in ("cow", "mor"):
             raise ValueError(f"unknown apply_mode {apply_mode!r}")
         self.apply_mode = apply_mode
-        # "auto" (default): measured winner-count cost model — broadcast
-        #   join while the winner set fits ``broadcast_max_rows`` (payload
-        #   never shuffles), salted single-pass once it cannot; the previous
-        #   epoch's net count short-circuits the probe (engine/dedup.py
-        #   latest_by_key_auto).
-        # "join": numeric-only winner aggregation + slim payload join — all
-        #   HashAggregate, skew spread over (key, lsn);
-        # "salted": two-phase max_by(struct) — one pass over the payload but
-        #   SortAggregate stages (var-width buffer).
-        # All variants share the exact lineage-count contract.
-        if dedup_variant not in ("auto", "join", "salted"):
-            raise ValueError(f"unknown dedup_variant {dedup_variant!r}")
-        self.dedup_variant = dedup_variant
+        # dedup (engine/dedup.py latest_by_key_auto): measured winner-count
+        # cost model — broadcast join while the winner set fits
+        # ``broadcast_max_rows`` (payload never shuffles), salted
+        # single-pass once it cannot; the previous epoch's net count
+        # short-circuits the probe.  Both plans share the exact
+        # lineage-count contract.
         self.broadcast_max_rows = broadcast_max_rows
         # key_blooms: stamp a per-file bloom of key_col into every commit's
         # manifest entries, enabling lookup()'s file skipping.  Opt-in: the
@@ -286,18 +273,14 @@ class CdcPipeline:
         filter keeps every version of a sought key — so the resolve sees
         the key's full version set, same as a full read_state().
         """
-        keys = list(keys)
-        if not keys:
-            return self.read_state(snapshot_id).limit(0)
         # spec + schema come from the PINNED snapshot: a time-traveled lookup
         # across a partition-spec change (migrate.update_partitioning) must
         # hash keys with the spec the snapshot's files were written under —
         # the current spec would prune every shard of the old layout
-        snap = (
-            self.table.snapshot(snapshot_id)
-            if snapshot_id
-            else self.table.current_snapshot()
-        )
+        snap = self.table.snapshot_at(snapshot_id)
+        keys = list(keys)
+        if not keys:
+            return self.read_state(snap.snapshot_id).limit(0)
         field = next(
             (f for f in snap.schema.fields if f.name == self.key_col), None
         )
@@ -312,11 +295,7 @@ class CdcPipeline:
         keys = _coerce_probe_values(field, keys)
         pf = None
         spec = snap.partition_spec
-        if (
-            spec
-            and spec[0].source_col == self.key_col
-            and spec[0].transform in ("bucket", "bucket_m3")
-        ):
+        if spec and spec[0].source_col == self.key_col and spec[0].transform == "bucket_m3":
             kdf = self.spark.createDataFrame(
                 [(k,) for k in keys],
                 T.StructType([T.StructField(self.key_col, field.dataType)]),
@@ -324,7 +303,7 @@ class CdcPipeline:
             buckets = {r["b"] for r in kdf.select(spec[0].expr().alias("b")).collect()}
             pf = {spec[0].name: buckets}
         df = self._read_resolved(
-            snapshot_id,
+            snap.snapshot_id,
             partition_filter=pf,
             key_filter={self.key_col: keys},
             row_filter=F.col(self.key_col).isin(keys),
@@ -357,11 +336,10 @@ class CdcPipeline:
         (conservative read contract).
         """
         values = list(values)
-        snap = (
-            self.table.snapshot(snapshot_id)
-            if snapshot_id
-            else self.table.current_snapshot()
-        )
+        # both passes read ONE snapshot: a commit landing between them must
+        # not feed the key pass candidates from another version of the table
+        snap = self.table.snapshot_at(snapshot_id)
+        sid = snap.snapshot_id
         field = next((f for f in snap.schema.fields if f.name == col), None)
         if field is None:
             raise ValueError(
@@ -369,18 +347,18 @@ class CdcPipeline:
                 f"({[f.name for f in snap.schema.fields]})"
             )
         if not values:
-            return self.read_state(snapshot_id).limit(0)
+            return self.read_state(sid).limit(0)
         values = _coerce_probe_values(field, values)
         cand = (
-            self.table.read(self.spark, snapshot_id=snapshot_id, key_filter={col: values})
+            self.table.read(self.spark, snapshot_id=sid, key_filter={col: values})
             .where(F.col(col).isin(values))
             .select(self.key_col)
             .distinct()
         )
         keys = [r[0] for r in cand.collect()]
         if not keys:
-            return self.read_state(snapshot_id).limit(0)
-        return self.lookup(keys, snapshot_id=snapshot_id).where(F.col(col).isin(values))
+            return self.read_state(sid).limit(0)
+        return self.lookup(keys, snapshot_id=sid).where(F.col(col).isin(values))
 
     def _read_resolved(
         self,
@@ -393,17 +371,15 @@ class CdcPipeline:
         keep-max-LSN resolve applied when deltas may exist.  Filters are
         applied BEFORE the resolve; callers must only pass filters that
         keep every version of any key they keep (key-level predicates)."""
+        snap = self.table.snapshot_at(snapshot_id)
         df = self.table.read(
             self.spark,
-            snapshot_id=snapshot_id,
+            snapshot_id=snap.snapshot_id,
             partition_filter=partition_filter,
             key_filter=key_filter,
         )
         if row_filter is not None:
             df = df.where(row_filter)
-        snap = (
-            self.table.snapshot(snapshot_id) if snapshot_id else self.table.current_snapshot()
-        )
         if self.apply_mode == "mor" or snap.properties.get("mor") == "1":
             df = latest_by_key_salted(df, self.key_col, INTERNAL_LAST_LSN, self.n_salts)
         return df
@@ -455,11 +431,7 @@ class CdcPipeline:
         sides of the pre/post join are pruned to the changed buckets, so
         cost stays O(changed buckets).
         """
-        to_snap = (
-            self.table.snapshot(to_snapshot_id)
-            if to_snapshot_id
-            else self.table.current_snapshot()
-        )
+        to_snap = self.table.snapshot_at(to_snapshot_id)
         fresh = to_snap.files
         if from_snapshot_id is not None:
             old_paths = {f["path"] for f in self.table.snapshot(from_snapshot_id).files}
@@ -590,7 +562,7 @@ class CdcPipeline:
         # the files the merge writes anyway — NO extra scan of the event
         # batch in either mode.
 
-        # ---- net change per key: salted two-phase keep-max-LSN dedup.
+        # ---- net change per key: keep-max-LSN dedup (auto plan choice).
         # net is ≤1 row/key — small vs the event volume — so it is cached and
         # reused by the stats pass and the merge write (one dedup execution).
         obs_ev = Observation(f"events-{epoch_id}")
@@ -602,45 +574,20 @@ class CdcPipeline:
         )
         dedup_cleanup: list = []
         variant_report: dict = {}
-        if self.dedup_variant == "join":
-            # observation rides the slim aggregate branch only, so it fires
-            # exactly once even though `events` appears twice in the plan
-            net = latest_by_key_join(
-                events,
-                self.key_col,
-                "lsn",
-                count_col="_fold_cnt",
-                distinct_col="_dst_cnt",
-                stats_df=events_observed,
-                check_payload_consistency=self.debug_checks,
-                cleanup=dedup_cleanup,
-            )
-            variant_report["variant"] = "join"
-        elif self.dedup_variant == "salted":
-            net = latest_by_key_salted(
-                events_observed,
-                self.key_col,
-                "lsn",
-                self.n_salts,
-                count_col="_fold_cnt",
-                distinct_col="_dst_cnt",
-            )
-            variant_report["variant"] = "salted"
-        else:  # auto: measured winner-count cost model (engine/dedup.py)
-            net = latest_by_key_auto(
-                events,
-                self.key_col,
-                "lsn",
-                n_salts=self.n_salts,
-                count_col="_fold_cnt",
-                distinct_col="_dst_cnt",
-                stats_df=events_observed,
-                check_payload_consistency=self.debug_checks,
-                broadcast_max_rows=self.broadcast_max_rows,
-                cleanup=dedup_cleanup,
-                estimate=self._net_estimate,
-                chosen=variant_report,
-            )
+        net = latest_by_key_auto(
+            events,
+            self.key_col,
+            "lsn",
+            n_salts=self.n_salts,
+            count_col="_fold_cnt",
+            distinct_col="_dst_cnt",
+            stats_df=events_observed,
+            check_payload_consistency=self.debug_checks,
+            broadcast_max_rows=self.broadcast_max_rows,
+            cleanup=dedup_cleanup,
+            estimate=self._net_estimate,
+            chosen=variant_report,
+        )
         net = _align(
             net,
             list(merged_payload.fields)

@@ -1,43 +1,28 @@
-"""Dedup keep-latest-within-key — the E1 pattern, four implementations.
+"""Dedup keep-latest-within-key — the E1 pattern.
 
 The reference's CDC dedup (`KeepFirstWithinPartition(Seq("id"), desc(ingested_on))`,
 etl/fhir/FhirRawToNormalizedMappings.scala:14-17) keeps the newest version of
 each resource id.  Our key is ``doc_id`` and the order column is ``lsn``.
 
-Four variants, all order-insensitive and deterministic (SURVEY.md §7.4 rules
-out the reference's order-unstable orderBy+dropDuplicates E5 pattern):
+``latest_by_key_auto`` is the engine's one dedup strategy (``CdcPipeline``
+always calls it).  Per epoch it picks one of two order-insensitive,
+deterministic plans (SURVEY.md §7.4 rules out the reference's order-unstable
+orderBy+dropDuplicates E5 pattern) from the MEASURED winner count:
 
-1. ``latest_by_key_window``  — row_number over (key, lsn desc): simple, but a
-   single hot key funnels its entire event mass through one task.
-2. ``latest_by_key_salted``  — two-phase max_by: pre-reduce per (key, salt)
-   so a hot key's rows are first reduced in S parallel tasks, then the S
-   survivors reduce per key.  Map-side partial aggregation + salt makes this
-   skew-proof (north_star skew handling).
-3. ``latest_by_key_join``   — numeric-only winner aggregation + payload
-   join, with adaptive winner-set broadcast.
-4. ``latest_by_key_pandas``  — Arrow/pandas variant (applyInPandas) for the
-   cases where the reduction itself needs imperative logic; zero per-row
-   Python (vectorized idxmax within each Arrow batch group).
+- ``latest_by_key_join`` — numeric-only winner aggregation + payload join
+  with a broadcast winner set: while the winners fit a broadcast the
+  payload never shuffles;
+- ``latest_by_key_salted`` — two-phase max_by: pre-reduce per (key, salt)
+  so a hot key's rows are first reduced in S parallel tasks, then the S
+  survivors reduce per key.  One pass over the payload, skew-proof; the
+  merge-on-read resolve (``CdcPipeline.read_state``) uses it directly.
 
-``latest_by_key_auto`` — the engine default (``CdcPipeline(dedup_variant=
-"auto")``) — selects between 2 and 3 per epoch from the MEASURED winner
-count: broadcast join while the winner set fits (payload never shuffles),
-salted single-pass once it cannot (see its docstring for the cost model).
+See ``latest_by_key_auto``'s docstring for the cost model.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window as W, functions as F
-
-
-def latest_by_key_window(df: DataFrame, key: str, order_col: str) -> DataFrame:
-    w = W.partitionBy(key).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def latest_by_key_salted(
@@ -60,7 +45,7 @@ def latest_by_key_salted(
     sum to the per-key distinct count.
     """
     payload = [c for c in df.columns if c != key]
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)))
+    salted = df.withColumn("_salt", F.pmod(F.hash(F.col(order_col)), F.lit(n_salts)))
     phase1 = salted.groupBy(key, "_salt").agg(
         F.max_by(F.struct(*payload), F.col(order_col)).alias("_w"),
         F.count(F.lit(1)).alias("_cnt"),
@@ -271,14 +256,3 @@ def latest_by_key_auto(
     return latest_by_key_salted(
         df, key, order_col, n_salts, count_col=count_col, distinct_col=distinct_col
     )
-
-
-def latest_by_key_pandas(df: DataFrame, key: str, order_col: str) -> DataFrame:
-    """applyInPandas variant: per-key groups arrive as Arrow batches; the
-    winner is picked with vectorized idxmax (no per-row Python)."""
-    schema = df.schema
-
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.loc[[pdf[order_col].idxmax()]]
-
-    return df.groupBy(key).applyInPandas(pick, schema=schema)

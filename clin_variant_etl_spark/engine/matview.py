@@ -182,7 +182,7 @@ class MaterializedAggregate:
         # localCheckpoint of the slim delta is cheap and avoids re-running the
         # feed scan for the bucket probe + merge + recompute branches
         delta = delta.localCheckpoint(eager=True)
-        if delta.rdd.isEmpty():
+        if delta.isEmpty():
             self.table.commit(
                 "mv_refresh", [], properties={"mv_source_snapshot_id": str(src_snap)},
                 expected_parent=mv_parent,

@@ -88,9 +88,7 @@ def compact(
         else table.current_snapshot()
     )
     spec = snap.partition_spec
-    selective = (
-        not drop_tombstones and len(spec) == 1 and snap.inline_files is None
-    )
+    selective = not drop_tombstones and len(spec) == 1
 
     pfilter = None
     replace = None
@@ -145,7 +143,7 @@ def compact(
                 if table.io.exists(os.path.join(table.path, f["path"]))
             )
 
-        row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
+        row_hash = F.hash(*[F.col(c) for c in df.columns])
         if selective:
             k_of = {
                 p: max(1, -(-_bytes(by_part[p]) // target_file_bytes)) for p in pfilter[spec[0].name]

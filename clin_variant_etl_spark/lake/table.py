@@ -11,7 +11,7 @@ isolation / time travel, compaction — implemented as:
   atomic and two racing writers cannot both win the same version — the
   equivalent of Delta's _delta_log protocol, minimized;
 - partition spec: identity columns and/or hash buckets
-  (``pmod(xxhash64(col), N)``), so CDC merges rewrite only affected buckets
+  (``pmod(murmur3(col), N)``), so CDC merges rewrite only affected buckets
   and reads prune on partition values manifest-side *and* parquet-side;
 - schema evolution: every snapshot carries the full history of schemas; data
   files written under old schemas are read with their own schema and aligned
@@ -72,15 +72,14 @@ class PartitionField:
 
     transform:
       - "identity":  partition value = string value of ``source_col``
-      - "bucket":    partition value = pmod(xxhash64(source_col), n)
       - "bucket_m3": partition value = pmod(murmur3(source_col), n) — the
         EXACT formula of Spark's ``HashPartitioning.partitionIdExpression``
         (``F.hash`` is Murmur3 seed 42, the same hash ``repartition(n, col)``
         uses).  A frame that is hash-partitioned on ``source_col`` into
         exactly ``n`` partitions is therefore ALREADY physically grouped by
         this bucket value — writers can skip the pre-write repartition
-        exchange entirely (``write_data_files(aligned=True)``).  The default
-        for new CDC tables; "bucket" remains readable for existing tables.
+        exchange entirely (``write_data_files(aligned=True)``).  The only
+        bucket transform; CDC tables bucket their key with it.
     """
 
     name: str
@@ -92,8 +91,6 @@ class PartitionField:
         c = F.col(self.source_col)
         if self.transform == "identity":
             return c.cast("string")
-        if self.transform == "bucket":
-            return F.pmod(F.xxhash64(c), F.lit(self.n)).cast("int").cast("string")
         if self.transform == "bucket_m3":
             return F.pmod(F.hash(c), F.lit(self.n)).cast("int").cast("string")
         raise ValueError(f"unknown transform {self.transform}")
@@ -365,8 +362,6 @@ class Snapshot:
     #              "n_files": int}; file entries live inside the shards
     manifests: list[dict] = field(default_factory=list)
     properties: dict[str, str] = field(default_factory=dict)
-    # legacy single-manifest snapshots carry the file list inline
-    inline_files: list[dict] | None = None
     root: str | None = None  # table path, for resolving shard refs
     io: FileIO = field(default=_DEFAULT_IO, repr=False, compare=False)
 
@@ -377,15 +372,13 @@ class Snapshot:
     @property
     def files(self) -> list[dict]:
         """Full file list (concatenated from shards; memoized per shard)."""
-        if self.inline_files is not None:
-            return self.inline_files
         out: list[dict] = []
         for m in self.manifests:
             out.extend(_load_shard(os.path.join(self.root, m["path"]), self.io))
         return out
 
     def to_json(self) -> dict:
-        d = {
+        return {
             "snapshot_id": self.snapshot_id,
             "parent_id": self.parent_id,
             "operation": self.operation,
@@ -396,9 +389,6 @@ class Snapshot:
             "manifests": self.manifests,
             "properties": self.properties,
         }
-        if self.inline_files is not None:
-            d["files"] = self.inline_files
-        return d
 
     @staticmethod
     def from_json(d: dict, root: str | None = None, io: FileIO = _DEFAULT_IO) -> "Snapshot":
@@ -410,9 +400,8 @@ class Snapshot:
             schema_id=d["schema_id"],
             schemas={int(k): T.StructType.fromJson(v) for k, v in d["schemas"].items()},
             partition_spec=[PartitionField.from_json(p) for p in d.get("partition_spec", [])],
-            manifests=d.get("manifests", []),
+            manifests=d["manifests"],
             properties=d.get("properties", {}),
-            inline_files=d.get("files"),
             root=root,
             io=io,
         )
@@ -482,6 +471,14 @@ class LakeTable:
             raise FileNotFoundError(f"no snapshots at {self.path}")
         return self.snapshot(ids[-1])
 
+    def snapshot_at(self, snapshot_id: int | None = None) -> Snapshot:
+        """The snapshot a reader pinned: ``None`` means the current one;
+        any other id must exist (ids start at 1, so 0 raises rather than
+        silently reading the current state)."""
+        if snapshot_id is None:
+            return self.current_snapshot()
+        return self.snapshot(snapshot_id)
+
     def snapshot(self, sid: int) -> Snapshot:
         key = (self.path, sid)
         got = _SNAP_CACHE.get(key)
@@ -511,11 +508,6 @@ class LakeTable:
     # atomically only when a snapshot passes QC (reference: ES alias swap,
     # etl/es/Publish.scala:28-38; Iceberg branch/tag equivalent).
     @property
-    def _refs_path(self) -> str:
-        # legacy single-file refs (pre-versioning); still read as the base
-        return os.path.join(self.path, "_meta", "refs.json")
-
-    @property
     def _refs_dir(self) -> str:
         return os.path.join(self.path, "_meta", "refs")
 
@@ -527,14 +519,11 @@ class LakeTable:
         )
 
     def _read_refs_version(self, versions: list[int]) -> dict[str, int]:
-        if versions:
-            return json.loads(
-                self.io.read(os.path.join(self._refs_dir, f"r{versions[-1]:08d}.json"))
-            )
-        try:
-            return json.loads(self.io.read(self._refs_path))  # legacy base
-        except FileNotFoundError:
+        if not versions:
             return {}
+        return json.loads(
+            self.io.read(os.path.join(self._refs_dir, f"r{versions[-1]:08d}.json"))
+        )
 
     def refs(self) -> dict[str, int]:
         return self._read_refs_version(self._refs_versions())
@@ -784,18 +773,13 @@ class LakeTable:
         def key_of(p: dict) -> tuple:
             return tuple(sorted(p.items()))
 
-        # legacy inline snapshots are sharded once on their first new commit
-        parent_refs = parent.manifests
-        if parent.inline_files is not None:
-            parent_refs = self._write_shards(parent.inline_files)
-
         if replace_all:
             kept_refs: list[dict] = []
         elif replace_partitions:
             drop = {key_of(p) for p in replace_partitions}
-            kept_refs = [m for m in parent_refs if key_of(m["partition"]) not in drop]
+            kept_refs = [m for m in parent.manifests if key_of(m["partition"]) not in drop]
         else:
-            kept_refs = list(parent_refs)
+            kept_refs = list(parent.manifests)
 
         schemas = dict(parent.schemas)
         schema_id = parent.schema_id
@@ -878,8 +862,8 @@ class LakeTable:
             if snapshot_id is not None:
                 raise ValueError("pass either snapshot_id or ref, not both")
             snapshot_id = self.resolve_ref(ref)
-        snap = self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
-        if partition_filter and snap.inline_files is None:
+        snap = self.snapshot_at(snapshot_id)
+        if partition_filter:
             # manifest-side pruning: only shards of selected partitions are
             # even opened — driver work ∝ selected buckets, not table files
             refs = [
@@ -894,12 +878,6 @@ class LakeTable:
             ]
         else:
             files = snap.files
-            if partition_filter:
-                files = [
-                    f
-                    for f in files
-                    if all(f["partition"].get(k) in v for k, v in partition_filter.items())
-                ]
         if stats_filter:
             files = [f for f in files if _stats_may_match(f, stats_filter)]
         if key_filter:

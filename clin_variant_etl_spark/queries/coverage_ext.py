@@ -361,7 +361,7 @@ def upsert_load_replay(spark, sf_dir):
     )
     tmp = tempfile.mkdtemp(prefix="upsert_q_")
     tbl = LakeTable.create(
-        f"{tmp}/t", schema, [PartitionField("bucket", "orderkey", "bucket", 8)]
+        f"{tmp}/t", schema, [PartitionField("bucket", "orderkey", "bucket_m3", 8)]
     )
     o = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
@@ -416,7 +416,7 @@ def scd1_load_replay(spark, sf_dir):
     )
     tmp = tempfile.mkdtemp(prefix="scd1_q_")
     tbl = LakeTable.create(
-        f"{tmp}/t", schema, [PartitionField("bucket", "orderkey", "bucket", 8)]
+        f"{tmp}/t", schema, [PartitionField("bucket", "orderkey", "bucket_m3", 8)]
     )
     o = load(spark, sf_dir, "orders")
     b1 = o.where(F.col("o_orderkey") % 2 == 0).select(

@@ -87,6 +87,18 @@ def _discover_event_schema(spark, events_dir: str):
         raise
 
 
+def _table_key(table: LakeTable, key_col: str) -> str:
+    """The table's OWN key: the source column of a ``bucket_m3`` spec, else
+    ``key_col``.  Folding or resolving keep-max-LSN on any other column would
+    max_by-collapse distinct rows that share its value — silent data loss.
+    An identity spec (e.g. after ``migrate.update_partitioning`` on a
+    payload column) does not name the key."""
+    spec = table.partition_spec
+    if spec and spec[0].transform == "bucket_m3":
+        return spec[0].source_col
+    return key_col
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="clin_variant_etl_spark.run")
     p.add_argument("--events-dir", default=None, help="change-event log root (parquet)")
@@ -116,14 +128,6 @@ def main(argv: list[str] | None = None) -> int:
         default="cow",
         help="cow = copy-on-write merge; mor = delta-file commits "
         "(write cost ~ epoch delta; fold via maintenance.compact)",
-    )
-    p.add_argument(
-        "--dedup-variant",
-        choices=["auto", "join", "salted"],
-        default="auto",
-        help="keep-latest-within-key strategy; auto = measured cost model "
-        "(window/pandas variants exist in engine.dedup for tests but are "
-        "not pipeline options)",
     )
     p.add_argument(
         "--event-schema",
@@ -201,11 +205,7 @@ def main(argv: list[str] | None = None) -> int:
         from .schemas import INTERNAL_LAST_LSN
 
         t = LakeTable(args.table)
-        # the fold key is the table's OWN bucketing column, never a CLI
-        # default: folding on the wrong key would max_by-collapse distinct
-        # rows that share the wrong column's value — silent data loss
-        spec = t.partition_spec
-        key = spec[0].source_col if spec else args.key_col
+        key = _table_key(t, args.key_col)
         fold = (
             (key, INTERNAL_LAST_LSN)
             if args.apply_mode == "mor" and not args.no_fold
@@ -236,13 +236,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "lookup":
         import json
 
-        # Like maintain mode, the lookup key is the table's OWN bucketing
-        # column: resolving keep-max-LSN on a CLI-default key would silently
-        # return wrong/missing rows.  Error (not override) on a mismatch the
-        # caller typed explicitly.
-        spec = LakeTable(args.table).partition_spec
-        key = spec[0].source_col if spec else args.key_col
-        if spec and args.key_col != p.get_default("key_col") and args.key_col != key:
+        # Like maintain mode, the lookup key is the table's OWN key.  Error
+        # (not override) on a mismatch the caller typed explicitly.
+        key = _table_key(LakeTable(args.table), args.key_col)
+        if args.key_col != p.get_default("key_col") and args.key_col != key:
             p.error(
                 f"--key-col {args.key_col!r} disagrees with the table's bucket "
                 f"spec key {key!r}; lookup always uses the table's own key"
@@ -266,7 +263,6 @@ def main(argv: list[str] | None = None) -> int:
         key_col=args.key_col,
         n_salts=args.n_salts,
         apply_mode=args.apply_mode,
-        dedup_variant=args.dedup_variant,
         key_blooms=args.key_blooms,
         bloom_cols=tuple(c for c in (args.bloom_cols or "").split(",") if c),
     )
@@ -280,11 +276,10 @@ def main(argv: list[str] | None = None) -> int:
         from .lake.maintenance import auto_fold
         from .schemas import INTERNAL_LAST_LSN
 
-        # fold key = the table's OWN bucketing column (same rule as
-        # maintain/lookup); idempotent under foreachBatch redelivery —
-        # see StreamingCdc.after_batch crash contract
-        spec = pipe.table.partition_spec
-        fold_key = spec[0].source_col if spec else args.key_col
+        # fold key = the table's OWN key (same rule as maintain/lookup);
+        # idempotent under foreachBatch redelivery — see
+        # StreamingCdc.after_batch crash contract
+        fold_key = _table_key(pipe.table, args.key_col)
 
         def after_batch(pipeline, epoch_id, res):
             auto_fold(

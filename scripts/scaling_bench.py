@@ -267,9 +267,8 @@ deterministic pre-generated input ({n_events:,} events incl. duplicate
 redeliveries, {n_epochs} epochs, Zipf-1.1 hot-key skew, 5% dups, 5% late,
 10% deletes, seed 42) — at N={n_lo} and 4N={n_hi} cores ("N and 4N cores"
 per the driver protocol), fresh JVM per leg, {rounds} interleaved rounds,
-best round per level, epoch 0 excluded as JVM warmup.  Dedup variant:
-**{os.environ.get("SPARK_GRAFT_BENCH_DEDUP_VARIANT", "auto")}** (the
-engine default is `auto` — winner-count cost model; `CdcPipeline(dedup_variant=…)` pins).
+best round per level, epoch 0 excluded as JVM warmup.  Dedup: the
+engine's one strategy, `auto` (winner-count cost model, engine/dedup.py).
 
 ## Hardware ceilings measured in-protocol (see module docstring for method)
 

@@ -15,8 +15,7 @@ Skew immunity is layered:
   engine/dedup.py) — immune to any key/bucket distribution by construction;
 - the merge+write phase spreads a hot bucket over k tasks, where the
   measured-skew guard (engine/apply.py _aligned_partition_count) widens k
-  from the per-epoch bucket histogram; SPARK_GRAFT_DISABLE_SKEW_GUARD=1
-  gives the A/B baseline.
+  from the per-epoch bucket histogram.
 
 Usage:
   python scripts/skew_bench.py [n_events] [cpus] [n_epochs]
@@ -134,7 +133,6 @@ def run_leg(spark, name: str, events_dir: str, n_epochs: int) -> dict:
         ev_per_epoch = events / max(1, n_epochs - 1)
         return {
             "leg": name,
-            "guard": os.environ.get("SPARK_GRAFT_DISABLE_SKEW_GUARD") != "1",
             "epoch_sec": epoch_sec,
             "steady_epoch_sec": steady,
             "steady_events_per_sec": round(ev_per_epoch / steady, 1),
@@ -168,25 +166,10 @@ def main() -> None:
             d = os.path.join(root, name)
             write_events_by_epoch(build_events(pool, n_events, n_epochs, seed=42), d, cpus)
             dirs[name] = d
-        # interleave rounds so warmup / host-throttle windows don't bias a leg.
-        # SPARK_GRAFT_SKEW_AB=1 additionally runs the hot leg with the skew
-        # guard toggled off INSIDE the same session — the only same-window
-        # way to isolate the guard's effect from host throttle swings.
-        ab = os.environ.get("SPARK_GRAFT_SKEW_AB") == "1"
-        legs = [("uniform", "uniform", None), ("hot_bucket", "hot_bucket", None)]
-        if ab:
-            legs = [
-                ("uniform", "uniform", "0"),
-                ("hot_guard_on", "hot_bucket", "0"),
-                ("hot_guard_off", "hot_bucket", "1"),
-            ]
+        # interleave rounds so warmup / host-throttle windows don't bias a leg
         for _ in range(rounds):
-            for label, src, guard_off in legs:
-                if guard_off is not None:
-                    os.environ["SPARK_GRAFT_DISABLE_SKEW_GUARD"] = guard_off
-                r = run_leg(spark, src, dirs[src], n_epochs)
-                r["leg"] = label
-                runs.append(r)
+            for name in ("uniform", "hot_bucket"):
+                runs.append(run_leg(spark, name, dirs[name], n_epochs))
                 print(json.dumps(runs[-1]))
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -196,8 +179,7 @@ def main() -> None:
         name: min((r for r in runs if r["leg"] == name), key=lambda r: r["steady_epoch_sec"])
         for name in leg_names
     }
-    hot_key = "hot_bucket" if "hot_bucket" in best else "hot_guard_on"
-    ratio = best[hot_key]["steady_epoch_sec"] / best["uniform"]["steady_epoch_sec"]
+    ratio = best["hot_bucket"]["steady_epoch_sec"] / best["uniform"]["steady_epoch_sec"]
     summary = {
         "cpus": cpus,
         "n_events": n_events,

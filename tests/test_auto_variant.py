@@ -93,8 +93,6 @@ def test_auto_decision_table_and_equivalence(spark):
 def test_pipeline_auto_is_default_and_reports_choice(spark, tmp_path):
     ev = _events(spark)
 
-    pipe = CdcPipeline(spark, str(tmp_path / "t1"))
-    assert pipe.dedup_variant == "auto"
     create_cdc_table(str(tmp_path / "t1"), BASE_DOCS_SCHEMA, n_buckets=4)
     pipe = CdcPipeline(spark, str(tmp_path / "t1"))
     res = pipe.apply_epoch(ev, 0)

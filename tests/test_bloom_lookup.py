@@ -189,7 +189,7 @@ def test_bloom_cap_skips_large_files_and_warns(spark, tmp_path):
 
     schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
     t = LakeTable.create(
-        str(tmp_path / "big"), schema, [PartitionField("bucket", "doc_id", "bucket", 1)]
+        str(tmp_path / "big"), schema, [PartitionField("bucket", "doc_id", "bucket_m3", 1)]
     )
     df = spark.range(BLOOM_MAX_ROWS + 1).withColumnRenamed("id", "doc_id")
     with pytest.warns(UserWarning, match="BLOOM_MAX_ROWS"):
@@ -269,3 +269,45 @@ def test_lookup_by_version_history_exactness(spark, payload_bloom_pipe):
     live = state[doc]
     got_live = {r["doc_id"] for r in pipe.lookup_by("n_tok", [live]).collect()}
     assert doc in got_live
+
+
+def test_snapshot_id_zero_raises(spark, payload_bloom_pipe):
+    """Snapshot ids start at 1, so ``snapshot_id=0`` names no snapshot: every
+    pinned read must raise rather than fall through to the current state."""
+    pipe = payload_bloom_pipe
+    assert pipe.table.snapshot_ids()[0] == 1
+    key = pipe.read_state().first()["doc_id"]
+    with pytest.raises(FileNotFoundError):
+        pipe.lookup([key], snapshot_id=0)
+    with pytest.raises(FileNotFoundError):
+        pipe.lookup_by("n_tok", [1], snapshot_id=0)
+    with pytest.raises(FileNotFoundError):
+        pipe.read_changes(to_snapshot_id=0)
+    with pytest.raises(FileNotFoundError):
+        pipe.table.read(spark, snapshot_id=0)
+
+
+def test_lookup_by_reads_one_snapshot(spark, tmp_path, monkeypatch):
+    """A commit landing between lookup_by's candidate pass and its key pass
+    must not change the answer: both passes read the snapshot current at
+    the call."""
+    ev_schema = "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
+    create_cdc_table(str(tmp_path / "t"), BASE_DOCS_SCHEMA, n_buckets=4)
+    pipe = CdcPipeline(spark, str(tmp_path / "t"), apply_mode="mor", bloom_cols=("n_tok",))
+    pipe.apply_epoch(
+        spark.createDataFrame(
+            [(1, "I", "a", [1], 7, "w"), (2, "I", "b", [2], 7, "w")], ev_schema
+        ),
+        0,
+    )
+    delete_a = spark.createDataFrame([(3, "D", "a", None, None, "w")], ev_schema)
+    key_pass = pipe.lookup
+
+    def racing_lookup(keys, snapshot_id=None):
+        pipe.apply_epoch(delete_a, 1)  # lands after the candidate pass
+        return key_pass(keys, snapshot_id=snapshot_id)
+
+    monkeypatch.setattr(pipe, "lookup", racing_lookup)
+    got = sorted(r["doc_id"] for r in pipe.lookup_by("n_tok", [7]).collect())
+    assert got == ["a", "b"]
+    assert pipe.last_epoch_id() == 1  # the racing commit did land

@@ -20,7 +20,7 @@ SCHEMA = T.StructType(
 
 
 def _mk(spark, path, partitioned=True):
-    spec = [PartitionField("bucket", "doc_id", "bucket", 4)] if partitioned else []
+    spec = [PartitionField("bucket", "doc_id", "bucket_m3", 4)] if partitioned else []
     t = LakeTable.create(str(path), SCHEMA, spec)
     df = spark.createDataFrame(
         [("d1", 10, "web"), ("d2", 20, "books"), ("d3", 30, "code")], SCHEMA
@@ -42,7 +42,7 @@ def test_partition_pruning_manifest_and_scan(spark, tmp_path):
     # bucket of d1 per the same expr the writer used
     b = (
         spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit("d1")), F.lit(4)).cast("int").cast("string"))
+        .select(F.pmod(F.hash(F.lit("d1")), F.lit(4)).cast("int").cast("string"))
         .first()[0]
     )
     pruned = t.read(spark, partition_filter={"bucket": {b}})
@@ -192,32 +192,22 @@ def test_manifest_shards_reused_across_commits(spark, tmp_path):
     assert got == {"d1": 10, "d2": 20, "d3": 30}
 
 
-def test_legacy_inline_manifest_snapshot_still_readable(spark, tmp_path):
-    """Pre-sharding snapshots carry the file list inline ("files" key); they
-    must read correctly and get sharded on their first new commit."""
+def test_snapshot_without_manifests_fails_loudly(spark, tmp_path):
+    """A snapshot file with no ``manifests`` key is not a table this format
+    writes; reading it must raise instead of serving an empty table."""
     import json
 
-    t = _mk(spark, tmp_path / "t_legacy")
+    t = _mk(spark, tmp_path / "t_nomanifests")
     snap = t.current_snapshot()
-    # rewrite the current snapshot file in the LEGACY inline format
-    legacy = snap.to_json()
-    legacy["files"] = snap.files
-    del legacy["manifests"]
+    broken = snap.to_json()
+    del broken["manifests"]
     p = os.path.join(t.meta_dir, f"v{snap.snapshot_id:08d}.json")
     with open(p, "w") as fh:
-        json.dump(legacy, fh)
-    # bust the in-process caches so the legacy bytes are actually parsed
+        json.dump(broken, fh)
+    # bust the in-process cache so the rewritten bytes are actually parsed
     from clin_variant_etl_spark.lake import table as _tbl
 
     _tbl._SNAP_CACHE.clear()
-    _tbl._SHARD_CACHE.clear()
-    t2 = LakeTable(str(tmp_path / "t_legacy"))
-    got = {r["doc_id"]: r["n_tok"] for r in t2.read(spark).collect()}
-    assert got == {"d1": 10, "d2": 20, "d3": 30}
-    assert t2.current_snapshot().inline_files is not None
-    # first commit on the legacy table shards the inherited files
-    df = spark.createDataFrame([("d9", 5, "w")], t2.schema)
-    t2.commit("append", t2.write_data_files(df, 0, t2.partition_spec))
-    s = t2.current_snapshot()
-    assert s.inline_files is None and s.manifests
-    assert t2.read(spark).count() == 4
+    with pytest.raises(KeyError, match="manifests"):
+        LakeTable(str(tmp_path / "t_nomanifests")).read(spark)
+

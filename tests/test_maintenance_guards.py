@@ -26,7 +26,7 @@ SCHEMA = T.StructType(
 
 
 def _mk_table(spark, path, n_commits=3, rows_per=4):
-    t = LakeTable.create(str(path), SCHEMA, [PartitionField("bucket", "k", "bucket", 2)])
+    t = LakeTable.create(str(path), SCHEMA, [PartitionField("bucket", "k", "bucket_m3", 2)])
     for i in range(n_commits):
         df = spark.createDataFrame(
             [(i * rows_per + j, f"v{i}-{j}") for j in range(rows_per)], SCHEMA
@@ -74,16 +74,6 @@ def test_refs_versioned_no_lost_update(spark, tmp_path):
     assert refs["a"] == sids[0]
     assert refs["b"] == sids[1]
     assert refs["raced"] == sids[1], "racing tagger's update was lost"
-
-
-def test_refs_legacy_file_still_read(spark, tmp_path):
-    t = _mk_table(spark, tmp_path / "t", n_commits=1)
-    sid = t.current_snapshot().snapshot_id
-    with open(t._refs_path, "w") as fh:  # legacy single-file refs
-        json.dump({"old": sid}, fh)
-    assert t.refs() == {"old": sid}
-    t.tag("new", sid)  # versioned update merges on top of the legacy base
-    assert t.refs() == {"old": sid, "new": sid}
 
 
 def test_expire_evicts_snapshot_cache(spark, tmp_path):

@@ -83,7 +83,7 @@ def test_drop_nested_field(spark, tmp_path):
 
 def test_update_partitioning_rewrite(spark, tmp_path):
     t = _mk(spark, tmp_path / "m4")
-    new_spec = [PartitionField("bucket", "doc_id", "bucket", 2)]
+    new_spec = [PartitionField("bucket", "doc_id", "bucket_m3", 2)]
     update_partitioning(spark, t, new_spec)
     assert [p.name for p in t.partition_spec] == ["bucket"]
     assert t.read(spark).count() == 2
@@ -100,7 +100,7 @@ def test_update_partitioning_conflict_safety(spark, tmp_path):
     from clin_variant_etl_spark.lake.table import CommitConflict, LakeTable as LT
 
     t = _mk(spark, tmp_path / "m_conflict")
-    new_spec = [PartitionField("b", "doc_id", "bucket", 4)]
+    new_spec = [PartitionField("b", "doc_id", "bucket_m3", 4)]
     snap = t.current_snapshot()
     df = t.read(spark, snapshot_id=snap.snapshot_id)
     files = t.write_data_files(df, snap.schema_id, new_spec)

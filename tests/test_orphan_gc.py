@@ -23,7 +23,7 @@ SCHEMA = T.StructType(
 
 
 def _mk(spark, path):
-    spec = [PartitionField("bucket", "doc_id", "bucket", 4)]
+    spec = [PartitionField("bucket", "doc_id", "bucket_m3", 4)]
     t = LakeTable.create(str(path), SCHEMA, spec)
     df = spark.createDataFrame([("d1", 10), ("d2", 20), ("d3", 30)], SCHEMA)
     t.commit("append", t.write_data_files(df, 0, spec))

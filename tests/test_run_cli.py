@@ -200,3 +200,43 @@ def test_lookup_by_col_mode(spark, cli_env, capsys):
                  "--keys", str(val), "--by-col", "n_tok"]) == 0
     out = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
     assert sorted(r["doc_id"] for r in out) == want
+
+
+def test_identity_respec_keeps_the_cli_key(spark, cli_env, capsys):
+    """After ``migrate.update_partitioning`` to an identity spec on a payload
+    column, the spec no longer names the key: maintain must fold on
+    --key-col (folding on ``source`` would collapse distinct docs sharing a
+    source value) and lookup must probe --key-col, not the payload column."""
+    import json
+
+    from clin_variant_etl_spark.lake.migrate import update_partitioning
+    from clin_variant_etl_spark.lake.table import PartitionField
+
+    root = cli_env["root"]
+    table = os.path.join(root, "docs_respec")
+    argv = _drain_args(cli_env)
+    argv[argv.index("--table") + 1] = table
+    argv[argv.index("--stream-checkpoint") + 1] = os.path.join(root, "ckpt_respec")
+    argv[argv.index("--checkpoint-table") + 1] = os.path.join(root, "epochs_respec")
+    argv[argv.index("--lineage") + 1] = os.path.join(root, "lineage_respec")
+    assert main(argv) == 0
+    t = LakeTable(table)
+    update_partitioning(spark, t, [PartitionField("source", "source")])
+    # a redelivered copy of every row gives each partition a second file, so
+    # maintain's compaction selects (and folds) every partition
+    snap = t.current_snapshot()
+    t.commit("append", t.write_data_files(t.read(spark), snap.schema_id, snap.partition_spec))
+    pipe = CdcPipeline(spark, table, apply_mode="mor")
+    before = {r["doc_id"]: r["n_tok"] for r in pipe.read_state().collect()}
+    # more docs than source values: a fold keyed on source would lose rows
+    assert len(before) > pipe.read_state().select("source").distinct().count()
+
+    assert main(["--mode", "maintain", "--table", table, "--apply-mode", "mor",
+                 "--orphan-grace-hours", "0"]) == 0
+    assert {r["doc_id"]: r["n_tok"] for r in pipe.read_state().collect()} == before
+
+    key = sorted(before)[0]
+    capsys.readouterr()
+    assert main(["--mode", "lookup", "--table", table, "--keys", key]) == 0
+    out = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
+    assert [(r["doc_id"], r["n_tok"]) for r in out] == [(key, before[key])]

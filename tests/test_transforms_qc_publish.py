@@ -100,7 +100,7 @@ def test_publish_alias_swap_and_pinned_readers(spark, tmp_path):
 # ------------------------------------------------------------ compaction
 def test_compact_per_partition_selection_and_binpack(spark, tmp_path):
     schema = T.StructType([T.StructField("doc_id", T.StringType()), T.StructField("v", T.IntegerType())])
-    spec = [PartitionField("bucket", "doc_id", "bucket", 2)]
+    spec = [PartitionField("bucket", "doc_id", "bucket_m3", 2)]
     t = LakeTable.create(str(tmp_path / "cmp"), schema, spec)
     # 3 append commits -> up to 3 files per bucket
     for i in range(3):

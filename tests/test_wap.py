@@ -29,7 +29,7 @@ def _commit(spark, t, rows):
 
 def test_failed_audit_keeps_readers_on_last_good_snapshot(spark, tmp_path):
     t = LakeTable.create(
-        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket", 2)]
+        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket_m3", 2)]
     )
     _commit(spark, t, [(1, "a"), (2, "b")])
     good_sid, results = audit_and_publish(spark, t, CHECKS)
@@ -53,7 +53,7 @@ def test_failed_audit_keeps_readers_on_last_good_snapshot(spark, tmp_path):
 
 def test_fix_then_publish_advances_and_audit_pins_candidate(spark, tmp_path):
     t = LakeTable.create(
-        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket", 2)]
+        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket_m3", 2)]
     )
     _commit(spark, t, [(1, "a")])
     audit_and_publish(spark, t, CHECKS)
@@ -72,7 +72,7 @@ def test_fix_then_publish_advances_and_audit_pins_candidate(spark, tmp_path):
 
 def test_expiry_never_drops_the_published_snapshot(spark, tmp_path):
     t = LakeTable.create(
-        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket", 2)]
+        str(tmp_path / "t"), SCHEMA, [PartitionField("bucket", "k", "bucket_m3", 2)]
     )
     _commit(spark, t, [(1, "a")])
     good_sid, _ = audit_and_publish(spark, t, CHECKS)
