@@ -4,7 +4,8 @@ Two phases:
 1. **CDC apply throughput** — the BASELINE.json headline metric: generate a
    deterministic change-event log (testgen, seeded), apply it epoch-by-epoch
    through the full engine (keep-max-LSN dedup → LSN-guarded merge → atomic
-   commit → lineage), and report pre-dedup events/sec over the apply wall-clock.
+   commit carrying the epoch record), and report pre-dedup events/sec over
+   the apply wall-clock.
 2. **Headline queries** — a representative slice of the operator-parity
    registry at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), each
    executed to a noop sink (full plan execution, no driver transfer).
@@ -138,12 +139,7 @@ def bench_cdc(spark, n_events: int, n_cpus: int) -> dict:
         pipe = CdcPipeline(
             spark,
             tpath,
-            lineage_path=os.path.join(tmp, "lineage"),
-            checkpoint_path=os.path.join(tmp, "ckpt"),
             n_salts=n_salts,
-            # summary-only offset lineage: one fewer Spark job per epoch
-            # (global offsets observed for free during the dedup pass)
-            collect_part_stats=os.environ.get("SPARK_GRAFT_BENCH_PART_STATS", "0") == "1",
             # copy-on-write (default) vs merge-on-read delta apply
             apply_mode=os.environ.get("SPARK_GRAFT_BENCH_APPLY_MODE", "cow"),
         )

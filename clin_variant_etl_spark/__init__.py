@@ -8,7 +8,8 @@ surveyed in SURVEY.md) as an idiomatic Spark lakehouse engine:
                   the role Delta Lake plays in the reference
                   (reference: conf/EtlConfiguration.scala:43-54 load types).
 - ``engine``    : CDC apply — dedup-by-LSN, LSN-guarded MERGE, tombstones,
-                  exactly-once epoch gate, per-partition lineage
+                  exactly-once epoch gate and per-epoch lineage in the
+                  same atomic snapshot commit
                   (reference: FhirRawToNormalizedMappings.scala:14-17 keep-newest
                   dedup; LoadResolver Upsert/Scd1 semantics).
 - ``streaming`` : Structured Streaming wrapper (readStream → foreachBatch apply).

@@ -6,7 +6,7 @@ The pipeline per epoch (SURVEY.md §7.2 step 3-8):
          ──▶ bucket pruning (only buckets with changes are touched)  [merge ∝ delta]
          ──▶ full-outer join vs the touched bucket slice, LSN guard  [late events]
          ──▶ rewrite touched buckets + atomic snapshot commit        [exactly-once]
-         ──▶ lineage + checkpoint rows                               [observability]
+             (the commit's summary is the epoch's lineage record)    [observability]
 
 Two apply modes (``CdcPipeline(apply_mode=…)``), identical semantics and
 lineage counts, different physical write:
@@ -30,8 +30,11 @@ Exactly-once: the epoch gate (``last_epoch_id``) lives in the *data table's*
 snapshot properties, so gate-update and data-commit are one atomic operation —
 a foreachBatch retry of an already-committed epoch is a no-op (reference
 analogue: OverWritePartition idempotent batch replay, SURVEY.md §1.4/J2).
-The checkpoint table is written after the data commit and is therefore only
-advisory; a crash between the two is healed by backfill on replay.
+The same commit carries the epoch's record in its snapshot ``summary``
+(source LSN range, event and applied/dropped counts, wall ms — Iceberg's
+snapshot summary), so an epoch is applied iff its record exists: there is no
+side table to lag behind the data and no crash window between them.
+``epoch_log()`` and ``resume_info()`` are views over the snapshot log.
 
 Delete semantics: deletes write *tombstones* (``_deleted=true`` with the
 delete's lsn) rather than removing the row, so a late update with a lower lsn
@@ -41,22 +44,16 @@ than the delete stays dead (SURVEY.md §7.4 hard part #1).  Compaction
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 import time
+import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..lake.table import CommitConflict, LakeTable, PartitionField
-from ..schemas import (
-    EPOCH_CHECKPOINT_SCHEMA,
-    INTERNAL_DELETED,
-    INTERNAL_LAST_LSN,
-    LINEAGE_SCHEMA,
-    align_frame,
-    merge_schemas,
-    same_shape,
-)
+from ..schemas import INTERNAL_DELETED, INTERNAL_LAST_LSN, align_frame, merge_schemas, same_shape
 from .dedup import latest_by_key_auto, latest_by_key_salted
 
 EVENT_META_COLS = ("lsn", "op", "event_ts", "epoch_hint")
@@ -89,15 +86,24 @@ def create_cdc_table(
 
 
 def _aligned_partition_count(
-    n_buckets: int, parallelism: int, bucket_keys: list[int], net_count: int
+    n_buckets: int,
+    parallelism: int,
+    bucket_keys: list[int],
+    net_count: int,
+    shuffle_partitions: int = 0,
 ) -> int:
     """Partition count for the bucket-aligned merge: ``k * n_buckets`` with
     every task holding exactly ONE bucket value (k files per bucket per
     epoch, folded by compaction).
 
-    Two guards on k:
+    Three guards on k:
     - parallelism (ADVICE r3): k >= ceil(parallelism / n_buckets) so the
       merge uses at least cluster-parallelism tasks on few-bucket tables;
+    - session shuffle partitions: Spark keeps a join child's own hash
+      exchange only when it has at least ``spark.sql.shuffle.partitions``
+      partitions; below that it re-shuffles both sides to the session
+      count, the output is no longer bucket-grouped and every bucket gets
+      one file per task.  So k >= ceil(shuffle_partitions / n_buckets);
     - **measured skew**: a bucket's rows can only land in partitions
       ≡ bucket (mod n_buckets) — exactly k of them — so a HOT bucket
       (adversarial keys concentrating in one bucket) would pin its entire
@@ -111,7 +117,7 @@ def _aligned_partition_count(
       follow the same key distribution, so the net histogram is the right
       proxy for write work.
     """
-    k = max(1, math.ceil(parallelism / n_buckets))
+    k = max(1, math.ceil(max(parallelism, shuffle_partitions) / n_buckets))
     if net_count > 0 and bucket_keys:
         share = max(bucket_keys) / net_count
         if share > 1.5 / n_buckets:
@@ -156,7 +162,14 @@ def _coerce_probe_values(field: T.StructField, values: list) -> list:
 
 
 class CdcPipeline:
-    """One CDC target table + its lineage/checkpoint side tables."""
+    """One CDC target table; its snapshot log is the epoch log.
+
+    ``lineage_path`` and ``checkpoint_path`` are accepted and ignored (with a
+    ``DeprecationWarning``): each epoch's lineage and checkpoint record now
+    lives in the summary of the snapshot that applied it (``epoch_log``).
+    They remain only because the benchmark harness (``perfbench/workloads.py``)
+    still passes them; drop them once it stops.
+    """
 
     def __init__(
         self,
@@ -201,41 +214,22 @@ class CdcPipeline:
         # auto-variant probe short-circuit: last applied epoch's net-change
         # count (in-process; a restarted driver simply re-probes once)
         self._net_estimate: int | None = None
-        # Default (False): global offset range + count ride the `observe` on
-        # the dedup pass — ZERO extra scans; lineage gets one summary row.
-        # True adds per-source-partition offset rows at the cost of one extra
-        # scan + shuffle + driver collect of the event batch per epoch — at
-        # 10^8-event production epochs that is a double-read of the source,
-        # so it is opt-in for debugging/audit runs only.
+        # The epoch's source offset range + count always ride the `observe`
+        # on the dedup pass — ZERO extra scans.  True also stamps per-file
+        # ``_last_lsn`` [min, max] footer stats into the manifest entries the
+        # epoch writes (``table.added_files(sid, parent_id)``): per-file
+        # lineage at the cost of a footer read per written file.
         self.collect_part_stats = collect_part_stats
         # opt-in: assert the redelivery contract (same (key,lsn) ⇒ identical
         # payload) per epoch — one extra job, for audit/debug runs only
         self.debug_checks = debug_checks
-        self.lineage = self._side_table(lineage_path, LINEAGE_SCHEMA)
-        self.checkpoint = self._side_table(checkpoint_path, EPOCH_CHECKPOINT_SCHEMA)
-
-    @staticmethod
-    def _summary_part_rows(ev_stats: dict) -> list[dict]:
-        """Summary-only stand-in for per-partition offset rows (one logical
-        partition covering the whole epoch's offset range)."""
-        if not ev_stats.get("n"):
-            return []
-        return [
-            {
-                "partition_id": 0,
-                "source_offset_min": ev_stats["min_lsn"],
-                "source_offset_max": ev_stats["max_lsn"],
-                "event_count": ev_stats["n"],
-            }
-        ]
-
-    @staticmethod
-    def _side_table(path: str | None, schema: T.StructType) -> LakeTable | None:
-        if path is None:
-            return None
-        if LakeTable.exists(path):
-            return LakeTable(path)
-        return LakeTable.create(path, schema)
+        if lineage_path is not None or checkpoint_path is not None:
+            warnings.warn(
+                "CdcPipeline: lineage_path/checkpoint_path are ignored; epoch "
+                "lineage lives in the data snapshots (see epoch_log())",
+                DeprecationWarning,
+                stacklevel=2,
+            )
 
     # ------------------------------------------------------------------ read
     def read_state(self, snapshot_id: int | None = None) -> DataFrame:
@@ -393,7 +387,7 @@ class CdcPipeline:
         """Change-data-feed read: every key whose current version differs
         between two snapshots — upserts with their payload, deletes as
         ``_change_type='delete'`` rows — plus ``_last_lsn``.  The consumer's
-        cursor is the SNAPSHOT ID (``resume_info`` publishes one per epoch;
+        cursor is the SNAPSHOT ID (``epoch_log`` names each epoch's;
         ``from_snapshot_id=None`` means full history).
 
         Snapshot ids are the only sound cursor here: a source-LSN high-water
@@ -405,7 +399,8 @@ class CdcPipeline:
         in ``to`` is absent from ``from`` (per-key lsn never repeats).
 
         Cost is O(changed buckets), not O(table): only partitions owning a
-        file added since ``from`` are scanned on BOTH sides (a key's version
+        file added since ``from`` (``LakeTable.added_files``) are scanned on
+        BOTH sides (a key's version
         can only change via a new file in its own bucket), and compaction
         rewrites inside that window are filtered by the (key, lsn) anti-join
         — file movement is invisible, only value changes surface.
@@ -432,10 +427,7 @@ class CdcPipeline:
         cost stays O(changed buckets).
         """
         to_snap = self.table.snapshot_at(to_snapshot_id)
-        fresh = to_snap.files
-        if from_snapshot_id is not None:
-            old_paths = {f["path"] for f in self.table.snapshot(from_snapshot_id).files}
-            fresh = [f for f in fresh if f["path"] not in old_paths]
+        fresh = self.table.added_files(to_snap.snapshot_id, since=from_snapshot_id)
         deleted = F.coalesce(F.col(INTERNAL_DELETED), F.lit(False))
         change_type = F.when(deleted, F.lit("delete")).otherwise(F.lit("upsert"))
         if not fresh:
@@ -489,34 +481,49 @@ class CdcPipeline:
     def last_epoch_id(self) -> int:
         return int(self.table.properties().get("last_epoch_id", -1))
 
-    def resume_info(self) -> dict:
-        """Where to resume a batch-mode replay: last committed epoch (from
-        the atomic snapshot gate — authoritative) plus the applied source
-        offset high-water mark and per-epoch history (from the checkpoint
-        side table — advisory, healed on replay).  A driver restarting a
-        manual replay applies epochs > ``last_epoch_id`` / offsets >
-        ``max_lsn``; the epoch gate makes over-delivery harmless.
+    def epoch_log(self) -> list[dict]:
+        """One record per retained snapshot that applied an epoch, in
+        snapshot order: the commit's summary (``epoch_id``, source LSN
+        range, event/applied/dropped counts, ``wall_ms``) plus the
+        snapshot's ``snapshot_id`` and ``committed_at`` (UTC).  Maintenance
+        commits carry no epoch and are skipped.
+
+        Like Iceberg's snapshot log this covers RETAINED snapshots only:
+        ``expire_snapshots`` drops the records of the epochs it expires.
+        The resume point does not depend on them (``resume_info``).
         """
-        info = {"last_epoch_id": self.last_epoch_id(), "max_lsn": None, "epochs": []}
-        if self.checkpoint is not None:
-            rows = (
-                self.checkpoint.read(self.spark)
-                .orderBy("epoch_id")
-                .collect()
-            )
-            info["epochs"] = [
+        out = []
+        for sid in self.table.snapshot_ids():
+            snap = self.table.snapshot(sid)
+            if "epoch_id" in snap.summary:
+                committed = dt.datetime.fromtimestamp(snap.timestamp_ms / 1000, dt.timezone.utc)
+                out.append({**snap.summary, "snapshot_id": sid, "committed_at": committed})
+        return out
+
+    def resume_info(self) -> dict:
+        """Where to resume a batch-mode replay: the last committed epoch and
+        the applied source-offset high-water mark (both inherited snapshot
+        properties, so exact even after snapshot expiry) plus the per-epoch
+        history of the retained snapshots (``epoch_log``).  A driver
+        restarting a manual replay applies epochs > ``last_epoch_id`` /
+        offsets > ``max_lsn``; the epoch gate makes over-delivery harmless.
+        """
+        props = self.table.properties()
+        max_lsn = props.get("source_max_lsn")
+        return {
+            "last_epoch_id": int(props.get("last_epoch_id", -1)),
+            "max_lsn": None if max_lsn is None else int(max_lsn),
+            "epochs": [
                 {
-                    "epoch_id": r["epoch_id"],
-                    "min_lsn": r["source_min_lsn"],
-                    "max_lsn": r["source_max_lsn"],
-                    "events": r["event_count"],
-                    "snapshot_id": r["snapshot_id"],
+                    "epoch_id": e["epoch_id"],
+                    "min_lsn": e["source_min_lsn"],
+                    "max_lsn": e["source_max_lsn"],
+                    "events": e["event_count"],
+                    "snapshot_id": e["snapshot_id"],
                 }
-                for r in rows
-            ]
-            lsns = [r["source_max_lsn"] for r in rows if r["source_max_lsn"] is not None]
-            info["max_lsn"] = max(lsns) if lsns else None
-        return info
+                for e in self.epoch_log()
+            ],
+        }
 
     # ----------------------------------------------------------------- apply
     def apply_epoch(self, events: DataFrame, epoch_id: int) -> ApplyResult:
@@ -531,10 +538,8 @@ class CdcPipeline:
 
         snap = self.table.current_snapshot()
         if epoch_id <= int(snap.properties.get("last_epoch_id", -1)):
-            # replay of an already-committed epoch → exactly-once no-op;
-            # heal a possibly-missing checkpoint row (crash between data
-            # commit and checkpoint write).
-            self._backfill_checkpoint(epoch_id)
+            # replay of an already-committed epoch → exactly-once no-op:
+            # no Spark job, no commit
             return ApplyResult(epoch_id, snap.snapshot_id, 0, 0, 0, 0, 0, 0, 0, skipped=True)
 
         # ---- schema evolution: merge incoming payload schema into the table's
@@ -560,7 +565,7 @@ class CdcPipeline:
         # `observe` on the events scan inside the dedup job; per-file lsn
         # coverage (`collect_part_stats`) comes from the parquet footers of
         # the files the merge writes anyway — NO extra scan of the event
-        # batch in either mode.
+        # batch in either mode.  Both land in the epoch's own commit.
 
         # ---- net change per key: keep-max-LSN dedup (auto plan choice).
         # net is ≤1 row/key — small vs the event volume — so it is cached and
@@ -631,22 +636,32 @@ class CdcPipeline:
                     raise
                 ev_stats = {"min_lsn": None, "max_lsn": None, "n": 0}
             events_in = ev_stats["n"]
-            summary_rows = self._summary_part_rows(ev_stats)
-            part_rows = summary_rows
+            # the epoch's record, committed as the snapshot summary
+            record = {
+                "epoch_id": epoch_id,
+                "source_min_lsn": ev_stats["min_lsn"],
+                "source_max_lsn": ev_stats["max_lsn"],
+                "event_count": events_in,
+            }
+            # inherited: the gate plus the applied-offset high-water mark
+            props = {"last_epoch_id": str(epoch_id)}
+            prev_max = snap.properties.get("source_max_lsn")
+            if ev_stats["max_lsn"] is not None:
+                hw = ev_stats["max_lsn"] if prev_max is None else max(int(prev_max), ev_stats["max_lsn"])
+                props["source_max_lsn"] = str(hw)
 
             if not affected:
                 # empty epoch: advance the gate with a data-less commit
+                record.update(
+                    applied_inserts=0, applied_updates=0, applied_deletes=0,
+                    dropped_duplicates=0, dropped_stale=0,
+                    wall_ms=int((time.monotonic() - t0) * 1000),
+                )
                 new_snap = self.table.commit(
-                    "merge", [], properties={"last_epoch_id": str(epoch_id), "epoch_id": str(epoch_id)},
-                    expected_parent=snap.snapshot_id,
+                    "merge", [], properties=props, expected_parent=snap.snapshot_id,
+                    summary=record,
                 )
-                wall = int((time.monotonic() - t0) * 1000)
-                res = ApplyResult(
-                    epoch_id, new_snap.snapshot_id, events_in, 0, 0, 0, 0, 0, wall,
-                    phase_ms=phases, dedup_variant_used=variant_report.get("variant"),
-                )
-                self._write_sidecars(res, part_rows, summary_rows)
-                return res
+                return self._result(record, new_snap.snapshot_id, t0, phases, variant_report)
 
             pfilter = {BUCKET_PARTITION: set(affected)} if spec else None
 
@@ -659,11 +674,10 @@ class CdcPipeline:
             # repartition of the output frame — one full shuffle less per
             # epoch.  Misalignment is impossible by construction, and
             # partitionBy routes by value anyway.
-            # Parallelism guard (ADVICE r3): k = ceil(parallelism /
-            # n_buckets), so every task still holds exactly ONE bucket value
-            # (k files per bucket per epoch instead of 1, folded by
-            # compaction) while the merge join uses at least
-            # cluster-parallelism tasks even on few-bucket tables.
+            # k·n_buckets partitions (``_aligned_partition_count``): every
+            # task still holds exactly ONE bucket value (k files per bucket
+            # per epoch, folded by compaction) while the merge join uses at
+            # least cluster-parallelism tasks and keeps its own exchange.
             aligned = (
                 len(spec) == 1
                 and spec[0].transform == "bucket_m3"
@@ -676,6 +690,7 @@ class CdcPipeline:
                     self.spark.sparkContext.defaultParallelism,
                     [r["n_keys"] for r in bucket_rows],
                     net_count,
+                    int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 )
 
             obs_cls = Observation(f"cls-{epoch_id}")
@@ -813,29 +828,24 @@ class CdcPipeline:
             if self.apply_mode == "mor":
                 for e in files:
                     e["delta"] = True  # observability: delta vs base files
-            if self.collect_part_stats:
-                part_rows = [
-                    {
-                        "partition_id": i,
-                        "source_offset_min": (e.get("stats", {}).get(INTERNAL_LAST_LSN) or [None, None])[0],
-                        "source_offset_max": (e.get("stats", {}).get(INTERNAL_LAST_LSN) or [None, None])[1],
-                        "event_count": e["rows"],
-                    }
-                    for i, e in enumerate(files)
-                ]
             cls = obs_cls.get
-            n_of = lambda a, d=0: int(cls.get(a) or 0)  # noqa: E731
-            # exact duplicates (same lsn redelivered) vs superseded-in-batch
-            # (lower lsn for the same key, lost last-writer-wins)
-            dropped_dup = (events_in - total_dst) + n_of("dup")
-            dropped_stale = (total_dst - net_count) + n_of("stale")
+            n_of = lambda a: int(cls.get(a) or 0)  # noqa: E731
+            record.update(
+                applied_inserts=n_of("insert"),
+                applied_updates=n_of("update"),
+                applied_deletes=n_of("delete"),
+                # exact duplicates (same lsn redelivered) vs superseded-in-
+                # batch (lower lsn for the same key, lost last-writer-wins)
+                dropped_duplicates=(events_in - total_dst) + n_of("dup"),
+                dropped_stale=(total_dst - net_count) + n_of("stale"),
+            )
             _mark("write")
         finally:
             net.unpersist()
             for h in dedup_cleanup:
                 h.unpersist()
 
-        props = {"last_epoch_id": str(epoch_id), "epoch_id": str(epoch_id)}
+        record["wall_ms"] = int((time.monotonic() - t0) * 1000)
         if self.apply_mode == "mor":
             # stamp the snapshot so ANY reader (not just this pipeline
             # object) knows the table may hold unresolved deltas
@@ -850,6 +860,7 @@ class CdcPipeline:
                     new_schema=new_schema if evolved else None,
                     properties=props,
                     expected_parent=snap.snapshot_id,
+                    summary=record,
                 )
             else:
                 new_snap = self.table.commit(
@@ -860,6 +871,7 @@ class CdcPipeline:
                     new_schema=new_schema if evolved else None,
                     properties=props,
                     expected_parent=snap.snapshot_id,
+                    summary=record,
                 )
         except CommitConflict:
             # someone else moved the table; if they committed our epoch the
@@ -869,108 +881,18 @@ class CdcPipeline:
             raise
 
         _mark("commit")
-        wall = int((time.monotonic() - t0) * 1000)
-        res = ApplyResult(
-            epoch_id=epoch_id,
-            snapshot_id=new_snap.snapshot_id,
-            event_count=events_in,
-            applied_inserts=n_of("insert", 0),
-            applied_updates=n_of("update", 0),
-            applied_deletes=n_of("delete", 0),
-            dropped_duplicates=dropped_dup,
-            dropped_stale=dropped_stale,
-            wall_ms=wall,
-            evolved_schema=evolved,
-            phase_ms=phases,
-            dedup_variant_used=variant_report.get("variant"),
-        )
         self._net_estimate = net_count
-        self._write_sidecars(res, part_rows, summary_rows)
-        return res
-
-    # ------------------------------------------------------------- sidecars
-    def _write_sidecars(self, res: ApplyResult, part_rows, summary_rows) -> None:
-        """``part_rows``: per-partition lineage detail — the source-offset
-        summary by default, or (``collect_part_stats``) one row per written
-        data file with its footer-derived lsn coverage.  ``summary_rows``:
-        always the observe-derived SOURCE offset range — the epoch summary
-        row and the checkpoint record source offsets regardless of the
-        lineage detail mode."""
-        if self.lineage is not None:
-            rows = [
-                (
-                    res.epoch_id,
-                    int(r["partition_id"]),
-                    r["source_offset_min"],
-                    r["source_offset_max"],
-                    r["event_count"],
-                    None,
-                    None,
-                    None,
-                    None,
-                    None,
-                    None,
-                    res.snapshot_id,
-                )
-                for r in part_rows
-            ]
-            rows.append(
-                (
-                    res.epoch_id,
-                    -1,
-                    min((r["source_offset_min"] for r in summary_rows), default=None),
-                    max((r["source_offset_max"] for r in summary_rows), default=None),
-                    res.event_count,
-                    res.applied_inserts,
-                    res.applied_updates,
-                    res.applied_deletes,
-                    res.dropped_duplicates,
-                    res.dropped_stale,
-                    res.wall_ms,
-                    res.snapshot_id,
-                )
-            )
-            files = self.lineage.append_rows_local(rows, LINEAGE_SCHEMA)
-            self.lineage.commit("append", files)
-        if self.checkpoint is not None:
-            self._write_checkpoint_row(res, summary_rows)
-
-    def _write_checkpoint_row(self, res: ApplyResult, part_rows) -> None:
-        import datetime as _dt
-
-        row = (
-            res.epoch_id,
-            min((r["source_offset_min"] for r in part_rows), default=None) if part_rows else None,
-            max((r["source_offset_max"] for r in part_rows), default=None) if part_rows else None,
-            res.event_count,
-            res.snapshot_id,
-            _dt.datetime.now(_dt.timezone.utc),
+        return self._result(
+            record, new_snap.snapshot_id, t0, phases, variant_report, evolved_schema=evolved
         )
-        files = self.checkpoint.append_rows_local([row], EPOCH_CHECKPOINT_SCHEMA)
-        self.checkpoint.commit("append", files)
 
-    def _backfill_checkpoint(self, epoch_id: int) -> None:
-        """Heal a checkpoint row lost to a crash between commit and sidecar write.
-
-        Driver-side scan of snapshot manifests; at production scale the
-        epoch→snapshot mapping would be indexed, but the lookup is only hit on
-        crash replay so O(snapshots) is acceptable here.
-        """
-        if self.checkpoint is None:
-            return
-        existing = (
-            self.checkpoint.read(self.spark)
-            .where(F.col("epoch_id") == epoch_id)
-            .limit(1)
-            .count()
+    @staticmethod
+    def _result(record: dict, snapshot_id: int, t0: float, phases: dict, variant: dict, **kw) -> ApplyResult:
+        """The caller's view of a committed epoch record; its ``wall_ms``
+        also covers the commit."""
+        counts = {k: v for k, v in record.items() if not k.startswith("source_")}
+        counts["wall_ms"] = int((time.monotonic() - t0) * 1000)
+        return ApplyResult(
+            snapshot_id=snapshot_id, phase_ms=phases,
+            dedup_variant_used=variant.get("variant"), **counts, **kw,
         )
-        if existing:
-            return
-        snap_id = None
-        for sid in reversed(self.table.snapshot_ids()):
-            s = self.table.snapshot(sid)
-            if s.properties.get("epoch_id") == str(epoch_id):
-                snap_id = sid
-                break
-        res = ApplyResult(epoch_id, snap_id or -1, 0, 0, 0, 0, 0, 0, 0, skipped=True)
-        self._write_checkpoint_row(res, [])

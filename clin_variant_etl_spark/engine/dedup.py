@@ -9,9 +9,15 @@ always calls it).  Per epoch it picks one of two order-insensitive,
 deterministic plans (SURVEY.md §7.4 rules out the reference's order-unstable
 orderBy+dropDuplicates E5 pattern) from the MEASURED winner count:
 
-- ``latest_by_key_join`` — numeric-only winner aggregation + payload join
-  with a broadcast winner set: while the winners fit a broadcast the
-  payload never shuffles;
+- the join plan (``_winner_frame`` + ``_winner_join_tail``) — the winner
+  lsn per key is found with NUMERIC-only aggregates (HashAggregate; the one
+  countDistinct pre-aggregates on (key, lsn), so a hot key's rows spread
+  over its distinct lsns), and the payload rides ONE equi-join on
+  (key, lsn).  ``max_by(struct(payload…))`` instead would fall back to
+  SortAggregate and sort the whole batch.  While the measured winner set
+  fits ``broadcast_max_rows`` it is broadcast and the payload never
+  shuffles (map-side hash probe, skew-immune); with the probe disabled
+  (``None``) it is a (key, lsn)-spread shuffle join;
 - ``latest_by_key_salted`` — two-phase max_by: pre-reduce per (key, salt)
   so a hot key's rows are first reduced in S parallel tasks, then the S
   survivors reduce per key.  One pass over the payload, skew-proof; the
@@ -66,7 +72,7 @@ def latest_by_key_salted(
 
 def assert_payload_consistency(df: DataFrame, key: str, order_col: str) -> None:
     """Debug check of the redelivery contract ``same (key, order_col) ⇒
-    identical payload`` that makes ``latest_by_key_join``'s final
+    identical payload`` that makes the join plan's final
     ``dropDuplicates([key])`` deterministic: surfaces a corrupt producer
     (same LSN, different bytes) loudly instead of silently picking a winner.
     One extra aggregation job — wire it behind a debug flag, never in the
@@ -87,67 +93,12 @@ def assert_payload_consistency(df: DataFrame, key: str, order_col: str) -> None:
         )
 
 
-def latest_by_key_join(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    count_col: str | None = None,
-    distinct_col: str | None = None,
-    stats_df: DataFrame | None = None,
-    check_payload_consistency: bool = False,
-    broadcast_max_rows: int | None = 4_000_000,
-    cleanup: list | None = None,
-) -> DataFrame:
-    """Winner-lsn join variant: same contract as ``latest_by_key_salted``
-    but the heavy aggregation never touches the payload.
-
-    Why: ``max_by(struct(payload…))`` carries a variable-width buffer, so
-    Catalyst falls back to SortAggregate at every stage — the whole event
-    batch gets sorted twice.  Here the winner is found with NUMERIC-only
-    aggregates (HashAggregate; the single countDistinct rewrites into a
-    (key, lsn) pre-aggregation, so a hot key's rows spread over its distinct
-    lsns — skew-safe without explicit salting), and the payload rides ONE
-    equi-join on (key, lsn) — also spread by lsn, also skew-safe.  The join
-    side scans only the two join columns until the winners match (column
-    pruning), so the extra pass is a slim scan, not a second full decode.
-    Exact duplicates of the winning event survive the join; the final
-    ``dropDuplicates([key])`` is deterministic in content because same
-    (key, lsn) implies an identical redelivered payload.
-
-    **Adaptive broadcast** (``broadcast_max_rows``): the winner frame is 4
-    narrow columns — when its MEASURED row count (one count job over the
-    persisted slim aggregate, pennies next to the payload pass) is at or
-    under the threshold, it is broadcast, and the payload side never
-    shuffles at all in the dedup: events are hash-probe filtered map-side
-    in their source partitioning, so the only payload movement of the whole
-    dedup is the ≤1-row-per-key winner set — immune to hot-key skew by
-    construction (no shuffle, no hot partition).  Above the threshold
-    (10^8-key production epochs, where a broadcast would not fit) the plan
-    falls back to the (key, lsn)-spread shuffle join unchanged.  Pass
-    ``None`` to disable the count probe entirely.
-
-    ``stats_df``: optionally a different (e.g. ``observe``-instrumented)
-    frame for the aggregate branch, so attached observations fire exactly
-    once even though the input appears twice in the plan.
-    ``cleanup``: when the broadcast probe persists the winner frame, the
-    persisted handle is appended here so the caller can unpersist after the
-    downstream consumer has materialized.
-    """
-    if check_payload_consistency:
-        assert_payload_consistency(df, key, order_col)
-    win = _winner_frame(df, key, order_col, stats_df)
-    if broadcast_max_rows is not None:
-        win = win.persist()
-        if cleanup is not None:
-            cleanup.append(win)
-        if win.count() <= broadcast_max_rows:
-            win = F.broadcast(win)
-    return _winner_join_tail(df, win, key, order_col, count_col, distinct_col)
-
-
 def _winner_frame(df: DataFrame, key: str, order_col: str, stats_df: DataFrame | None):
     """Slim numeric winner aggregate: (key, winning order value, fold count,
-    distinct count) — 4 narrow columns, HashAggregate all the way."""
+    distinct count) — 4 narrow columns, HashAggregate all the way.
+    ``stats_df``: optionally a different (e.g. ``observe``-instrumented)
+    frame for this branch, so attached observations fire exactly once even
+    though the input appears twice in the join plan."""
     src = stats_df if stats_df is not None else df
     w = src.groupBy(key).agg(
         F.max(order_col).alias("_win"),
@@ -165,6 +116,9 @@ def _winner_join_tail(
     count_col: str | None,
     distinct_col: str | None,
 ) -> DataFrame:
+    """Payload of each key's winning (key, lsn).  Exact duplicates of the
+    winner survive the join; ``dropDuplicates([key])`` is deterministic in
+    content because same (key, lsn) implies an identical payload."""
     out = df.join(win, [key, order_col]).dropDuplicates([key])
     keep = [c for c in df.columns]
     if count_col:
@@ -213,6 +167,9 @@ def latest_by_key_auto(
        cost is one numeric HashAggregate — pennies next to the payload pass
        it avoids repeating).
 
+    ``broadcast_max_rows=None`` disables the probe: always the shuffle
+    join.  ``cleanup``: the persisted winner frame is appended here so the
+    caller can unpersist it after the downstream consumer has materialized.
     ``chosen`` (optional dict) reports ``variant`` ("join" | "salted"),
     ``probed`` and ``n_winners`` for observability/tests.
     """
@@ -236,7 +193,7 @@ def latest_by_key_auto(
             distinct_col=distinct_col,
         )
     if broadcast_max_rows is None:
-        # probe disabled: shuffle join, same as latest_by_key_join(None)
+        # probe disabled: (key, lsn)-spread shuffle join
         report.update({"variant": "join", "probed": False, "n_winners": None})
         win = _winner_frame(df, key, order_col, stats_df)
         return _winner_join_tail(df, win, key, order_col, count_col, distinct_col)

@@ -9,7 +9,9 @@ isolation / time travel, compaction — implemented as:
 - snapshots: one self-contained JSON per commit under ``<table>/_meta/snapshots``,
   committed via *exclusive create* (hard-link of a tmp file) so a commit is
   atomic and two racing writers cannot both win the same version — the
-  equivalent of Delta's _delta_log protocol, minimized;
+  equivalent of Delta's _delta_log protocol, minimized.  Each carries
+  inherited ``properties`` and its own, non-inherited ``summary`` (Iceberg's
+  snapshot summary: the CDC engine records each epoch there);
 - partition spec: identity columns and/or hash buckets
   (``pmod(murmur3(col), N)``), so CDC merges rewrite only affected buckets
   and reads prune on partition values manifest-side *and* parquet-side;
@@ -25,10 +27,9 @@ shard *references*; each shard is an immutable file-list for one partition
 value.  A merge commit therefore writes O(changed buckets) shards and reuses
 every untouched shard by reference — the driver-side serial term per commit
 is proportional to the delta, not the table.  Immutable shards and snapshots
-are memoized in-process, so repeated snapshot reads (one per epoch across
-data + sidecar tables) parse only what changed.  All data-path work (write,
-read, align, prune) is executor-side Spark; the driver only touches
-manifests.
+are memoized in-process, so repeated snapshot reads (several per epoch)
+parse only what changed.  All data-path work (write, read, align, prune) is
+executor-side Spark; the driver only touches manifests.
 
 Object-store posture (fsio.FileIO): all metadata/commit I/O goes through a
 pluggable FileIO whose exclusive-create primitive maps to a hard link
@@ -50,7 +51,6 @@ import uuid
 import warnings
 from dataclasses import dataclass, field
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import align_frame
@@ -362,6 +362,9 @@ class Snapshot:
     #              "n_files": int}; file entries live inside the shards
     manifests: list[dict] = field(default_factory=list)
     properties: dict[str, str] = field(default_factory=dict)
+    # per-commit record (Iceberg's snapshot summary): what THIS commit did,
+    # written atomically with it and never inherited by child snapshots
+    summary: dict = field(default_factory=dict)
     root: str | None = None  # table path, for resolving shard refs
     io: FileIO = field(default=_DEFAULT_IO, repr=False, compare=False)
 
@@ -388,6 +391,7 @@ class Snapshot:
             "partition_spec": [p.to_json() for p in self.partition_spec],
             "manifests": self.manifests,
             "properties": self.properties,
+            "summary": self.summary,
         }
 
     @staticmethod
@@ -402,6 +406,7 @@ class Snapshot:
             partition_spec=[PartitionField.from_json(p) for p in d.get("partition_spec", [])],
             manifests=d["manifests"],
             properties=d.get("properties", {}),
+            summary=d["summary"],
             root=root,
             io=io,
         )
@@ -490,6 +495,16 @@ class LakeTable:
             )
             _SNAP_CACHE[key] = got
         return got
+
+    def added_files(self, snapshot_id: int | None = None, since: int | None = None) -> list[dict]:
+        """File entries of ``snapshot_id`` (current when None) that snapshot
+        ``since`` does not reference; every file when ``since`` is None.
+        With ``since`` = the parent id these are the files one commit wrote."""
+        files = self.snapshot_at(snapshot_id).files
+        if since is None:
+            return files
+        old = {f["path"] for f in self.snapshot(since).files}
+        return [f for f in files if f["path"] not in old]
 
     @property
     def schema(self) -> T.StructType:
@@ -695,55 +710,6 @@ class LakeTable:
                 )
         return entries
 
-    def append_rows_local(
-        self, rows: list[tuple], schema: T.StructType, schema_id: int | None = None
-    ) -> list[dict]:
-        """Write a tiny driver-local row batch as one data file — NO Spark job.
-
-        Sidecar tables (lineage, checkpoint) receive a handful of rows per
-        epoch; writing them through a Spark write job costs 1-2 s of job
-        overhead each.  A driver-side pyarrow write is microseconds and the
-        manifest/commit path is identical.
-
-        ``schema_id`` defaults to the table's CURRENT schema id; ``schema``
-        must match that schema's shape (flat primitive sidecar schemas only —
-        unsupported Spark types fail loudly rather than silently miswriting).
-        """
-        import pyarrow as pa
-
-        _PA = {
-            "bigint": pa.int64(),
-            "int": pa.int32(),
-            "string": pa.string(),
-            "double": pa.float64(),
-            "boolean": pa.bool_(),
-            "timestamp": pa.timestamp("us", tz="UTC"),
-        }
-        if schema_id is None:
-            schema_id = self.current_snapshot().schema_id
-        arrays, names = [], []
-        for i, f in enumerate(schema.fields):
-            simple = f.dataType.simpleString()
-            if simple not in _PA:
-                raise TypeError(
-                    f"append_rows_local: unsupported type {simple!r} for column "
-                    f"{f.name!r} — only flat primitive sidecar schemas are supported; "
-                    f"use write_data_files for general tables"
-                )
-            names.append(f.name)
-            arrays.append(pa.array([r[i] for r in rows], type=_PA[simple]))
-        tbl = pa.table(dict(zip(names, arrays)))
-        dst_name = f"local-{uuid.uuid4().hex}.parquet"
-        pq.write_table(tbl, os.path.join(self.data_dir, dst_name))
-        return [
-            {
-                "path": os.path.join("data", dst_name),
-                "partition": {},
-                "schema_id": schema_id,
-                "rows": len(rows),
-            }
-        ]
-
     def commit(
         self,
         operation: str,
@@ -754,6 +720,7 @@ class LakeTable:
         properties: dict[str, str] | None = None,
         expected_parent: int | None = None,
         new_spec: list[PartitionField] | None = None,
+        summary: dict | None = None,
     ) -> Snapshot:
         """Commit a new snapshot.
 
@@ -763,6 +730,8 @@ class LakeTable:
         - otherwise: append
         - new_spec: adopt a new partition spec (requires replace_all — old
           files' partition tuples are meaningless under the new spec)
+        - properties: merged over the parent's and inherited by every child
+        - summary: JSON record of this commit alone (not inherited)
         """
         parent = self.current_snapshot()
         if expected_parent is not None and parent.snapshot_id != expected_parent:
@@ -799,6 +768,7 @@ class LakeTable:
             partition_spec=list(new_spec) if new_spec is not None else parent.partition_spec,
             manifests=kept_refs + self._write_shards(new_files),
             properties=props,
+            summary=dict(summary or {}),
             root=self.path,
         )
         self._write_snapshot(snap)

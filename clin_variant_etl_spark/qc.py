@@ -95,7 +95,7 @@ def handle_errors(results: list[CheckResult]) -> None:
 
 
 def cdc_table_checks(spark: SparkSession, pipeline) -> dict[str, Callable[[], DataFrame]]:
-    """The standard invariant suite for a CDC target table + its sidecars."""
+    """The standard invariant suite for a CDC target table + its epoch log."""
     state = pipeline.read_state
 
     def no_dup_keys():
@@ -112,30 +112,27 @@ def cdc_table_checks(spark: SparkSession, pipeline) -> dict[str, Callable[[], Da
             F.col("tokens").isNotNull() & (F.size("tokens") != F.col("n_tok"))
         )
 
+    # the epoch log is driver-side (one summary per retained snapshot), so
+    # these two checks build their offending rows locally
     def lineage_conserves_events():
-        """applied + dropped == events_in per epoch (summary rows)."""
-        if pipeline.lineage is None:
-            return state().limit(0)
-        lin = pipeline.lineage.read(spark).where(F.col("partition_id") == -1)
-        return lin.where(
-            F.coalesce("applied_inserts", F.lit(0))
-            + F.coalesce("applied_updates", F.lit(0))
-            + F.coalesce("applied_deletes", F.lit(0))
-            + F.coalesce("dropped_duplicates", F.lit(0))
-            + F.coalesce("dropped_stale", F.lit(0))
-            != F.col("event_count")
+        """applied + dropped == events_in per epoch (snapshot summaries)."""
+        parts = ("applied_inserts", "applied_updates", "applied_deletes",
+                 "dropped_duplicates", "dropped_stale")
+        totals = [
+            (e["epoch_id"], e["event_count"], sum(e[k] for k in parts))
+            for e in pipeline.epoch_log()
+        ]
+        return spark.createDataFrame(
+            [t for t in totals if t[1] != t[2]],
+            "epoch_id long, event_count long, applied_plus_dropped long",
         )
 
     def checkpoint_epochs_contiguous():
-        if pipeline.checkpoint is None:
-            return state().limit(0)
-        ck = pipeline.checkpoint.read(spark).select("epoch_id")
-        from pyspark.sql import Window as W
-
-        w = W.orderBy("epoch_id")
-        return (
-            ck.withColumn("_prev", F.lag("epoch_id").over(w))
-            .where(F.col("_prev").isNotNull() & (F.col("epoch_id") != F.col("_prev") + 1))
+        """Each retained epoch record follows its predecessor's epoch id."""
+        ids = [e["epoch_id"] for e in pipeline.epoch_log()]
+        return spark.createDataFrame(
+            [(cur, prev) for prev, cur in zip(ids, ids[1:]) if cur != prev + 1],
+            "epoch_id long, prev_epoch_id long",
         )
 
     return {

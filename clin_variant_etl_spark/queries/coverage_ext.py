@@ -478,13 +478,7 @@ def cdc_engine_full_replay(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="cdc_replay_q_")
     tpath = f"{tmp}/table"
     create_cdc_table(tpath, payload_schema, n_buckets=8)
-    pipe = CdcPipeline(
-        spark,
-        tpath,
-        lineage_path=f"{tmp}/lineage",
-        checkpoint_path=f"{tmp}/ckpt",
-        n_salts=4,
-    )
+    pipe = CdcPipeline(spark, tpath, n_salts=4)
     for epoch in range(4):
         # interleaved LSN slices → late + out-of-order delivery by design
         batch = ev.where(F.pmod(F.col("lsn"), F.lit(4)) == epoch)

@@ -6,7 +6,6 @@ Deploy (north_rule): ``spark-submit --py-files clin_variant_etl_spark.zip
     # batch-drain everything currently in the event log, then exit
     python -m clin_variant_etl_spark.run \
         --events-dir /data/events --table /lake/docs \
-        --lineage /lake/docs_lineage --checkpoint-table /lake/docs_epochs \
         --stream-checkpoint /ckpt/docs --mode drain
 
     # continuous tail (Structured Streaming, 30s triggers)
@@ -103,8 +102,6 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="clin_variant_etl_spark.run")
     p.add_argument("--events-dir", default=None, help="change-event log root (parquet)")
     p.add_argument("--table", required=True, help="target lake table path")
-    p.add_argument("--lineage", default=None, help="lineage side-table path")
-    p.add_argument("--checkpoint-table", default=None, help="epoch checkpoint side-table path")
     p.add_argument("--stream-checkpoint", default=None, help="Structured Streaming checkpoint dir")
     p.add_argument(
         "--mode",
@@ -258,8 +255,6 @@ def main(argv: list[str] | None = None) -> int:
     pipe = CdcPipeline(
         spark,
         args.table,
-        lineage_path=args.lineage,
-        checkpoint_path=args.checkpoint_table,
         key_col=args.key_col,
         n_salts=args.n_salts,
         apply_mode=args.apply_mode,

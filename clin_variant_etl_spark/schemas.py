@@ -50,41 +50,6 @@ CHANGE_EVENTS_V2_SCHEMA = T.StructType(
 INTERNAL_LAST_LSN = "_last_lsn"
 INTERNAL_DELETED = "_deleted"
 
-# ---------------------------------------------------------------------------
-# F4. epoch_checkpoint — exactly-once gate table (engine-internal)
-# ---------------------------------------------------------------------------
-EPOCH_CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch_id", T.LongType(), False),
-        T.StructField("source_min_lsn", T.LongType(), True),
-        T.StructField("source_max_lsn", T.LongType(), True),
-        T.StructField("event_count", T.LongType(), False),
-        T.StructField("snapshot_id", T.LongType(), True),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# F5. lineage — per-partition lineage/metrics (asserted output)
-# partition_id == -1 rows are the per-epoch apply summary.
-# ---------------------------------------------------------------------------
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch_id", T.LongType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("source_offset_min", T.LongType(), True),
-        T.StructField("source_offset_max", T.LongType(), True),
-        T.StructField("event_count", T.LongType(), False),
-        T.StructField("applied_inserts", T.LongType(), True),
-        T.StructField("applied_updates", T.LongType(), True),
-        T.StructField("applied_deletes", T.LongType(), True),
-        T.StructField("dropped_duplicates", T.LongType(), True),
-        T.StructField("dropped_stale", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("snapshot_id", T.LongType(), True),
-    ]
-)
-
 
 def same_shape(a: T.StructType, b: T.StructType) -> bool:
     """Structural equality ignoring nullability/metadata — nullable relaxation

@@ -154,3 +154,44 @@ def test_aligned_partition_count_skew_guard():
     assert _aligned_partition_count(8, 8, [1000] + [0] * 7, 1000) == 8 * 8
     # empty epoch: falls back to the parallelism guard
     assert _aligned_partition_count(8, 8, [], 0) == 8
+
+
+def test_aligned_replay_shuffle_partitions_above_buckets(spark):
+    """With ``spark.sql.shuffle.partitions`` above k·n_buckets, Spark would
+    re-shuffle the merge join to the session count and each bucket would get
+    one file per task.  k is floored at ceil(shuffle_partitions / n_buckets),
+    so every epoch still writes exactly k files per touched bucket."""
+    from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
+    from clin_variant_etl_spark.engine.oracle import assert_state_equals, replay_oracle
+    from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
+    from clin_variant_etl_spark.testgen import (
+        EventGenConfig,
+        generate_change_events,
+        write_events_by_epoch,
+    )
+
+    n_b, shuffle = 6, 16
+    par = spark.sparkContext.defaultParallelism
+    k = -(-max(par, shuffle) // n_b)
+    root = tempfile.mkdtemp(prefix="aligned_shuffle_")
+    cfg = EventGenConfig(n_docs=300, n_events=4000, n_epochs=3, seed=7)
+    tbl = generate_change_events(cfg)
+    ev_dir = os.path.join(root, "events")
+    write_events_by_epoch(tbl, ev_dir, 1)
+    tpath = os.path.join(root, "table")
+    create_cdc_table(tpath, BASE_DOCS_SCHEMA, n_buckets=n_b)
+    pipe = CdcPipeline(spark, tpath, n_salts=2)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    try:
+        for ep in range(cfg.n_epochs):
+            res = pipe.apply_epoch(spark.read.parquet(os.path.join(ev_dir, f"epoch={ep}")), ep)
+            snap = pipe.table.snapshot(res.snapshot_id)
+            per_bucket: dict[str, int] = {}
+            for f in pipe.table.added_files(snap.snapshot_id, since=snap.parent_id):
+                b = f["partition"]["bucket"]
+                per_bucket[b] = per_bucket.get(b, 0) + 1
+            assert per_bucket and set(per_bucket.values()) == {k}, (ep, per_bucket)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert_state_equals(pipe.read_state(), replay_oracle(tbl.to_pandas()))

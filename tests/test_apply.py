@@ -26,12 +26,7 @@ from clin_variant_etl_spark.testgen import (
 @pytest.fixture()
 def pipeline(spark, tmp_path):
     create_cdc_table(str(tmp_path / "docs"), BASE_DOCS_SCHEMA, n_buckets=8)
-    return CdcPipeline(
-        spark,
-        str(tmp_path / "docs"),
-        lineage_path=str(tmp_path / "lineage"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-    )
+    return CdcPipeline(spark, str(tmp_path / "docs"))
 
 
 def _events_df(spark, tmp_path, cfg):
@@ -155,32 +150,38 @@ def test_schema_evolution_mid_stream(spark, tmp_path, pipeline):
 
 def test_lineage_invariants(spark, tmp_path, pipeline):
     cfg = EventGenConfig(n_docs=50, n_events=800, n_epochs=4, seed=13)
-    _events_df(spark, tmp_path, cfg)
+    tbl = _events_df(spark, tmp_path, cfg)
+    results = []
     for k in range(cfg.n_epochs):
         ev = spark.read.parquet(str(tmp_path / "events" / f"epoch={k}"))
-        pipeline.apply_epoch(ev, k)
-    lin = pipeline.lineage.read(spark).toPandas()
-    per_part = lin[lin.partition_id >= 0]
-    summary = lin[lin.partition_id == -1]
-    # F5 invariant: sum(event_count) per epoch over partitions == summary count
-    got = per_part.groupby("epoch_id")["event_count"].sum().to_dict()
-    want = summary.set_index("epoch_id")["event_count"].to_dict()
-    assert got == want
-    # applied+dropped == event_count
-    for _, r in summary.iterrows():
+        results.append(pipeline.apply_epoch(ev, k))
+    log = pipeline.epoch_log()
+    # one record per epoch, each naming the snapshot that applied it
+    assert [e["epoch_id"] for e in log] == list(range(cfg.n_epochs))
+    assert [e["snapshot_id"] for e in log] == [r.snapshot_id for r in results]
+    events = tbl.to_pandas()
+    for e, r in zip(log, results):
+        # F5 invariant: the record's event count and source offsets are the
+        # epoch's own events
+        src = events[events.epoch_hint == e["epoch_id"]]
+        assert e["event_count"] == r.event_count == len(src)
+        assert (e["source_min_lsn"], e["source_max_lsn"]) == (src.lsn.min(), src.lsn.max())
+        # applied+dropped == event_count
         assert (
-            r.applied_inserts + r.applied_updates + r.applied_deletes + r.dropped_duplicates + r.dropped_stale
-            == r.event_count
+            e["applied_inserts"] + e["applied_updates"] + e["applied_deletes"]
+            + e["dropped_duplicates"] + e["dropped_stale"]
+            == e["event_count"]
         )
-    # checkpoint has one row per epoch
-    ck = pipeline.checkpoint.read(spark).toPandas()
-    assert sorted(ck.epoch_id) == list(range(cfg.n_epochs))
+        assert e["applied_updates"] == r.applied_updates
+        assert e["dropped_stale"] == r.dropped_stale
 
 
 def test_dedup_variants_equivalent(spark):
-    """join-based and salted dedup must produce identical winners AND
-    identical lineage counts (incl. exact-duplicate redeliveries)."""
-    from clin_variant_etl_spark.engine.dedup import latest_by_key_join, latest_by_key_salted
+    """Every plan ``latest_by_key_auto`` can pick — broadcast join, shuffle
+    join and salted — and the salted variant called directly must produce
+    identical winners AND identical lineage counts (incl. exact-duplicate
+    redeliveries)."""
+    from clin_variant_etl_spark.engine.dedup import latest_by_key_auto, latest_by_key_salted
 
     rows = [
         (1, "I", "a", [1], 1, "w"),
@@ -194,31 +195,23 @@ def test_dedup_variants_equivalent(spark):
     ev = spark.createDataFrame(
         rows, "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
     )
-    a = latest_by_key_salted(ev, "doc_id", "lsn", 4, count_col="_c", distinct_col="_d")
-    # join variant in BOTH plan shapes: winner-set broadcast (the adaptive
-    # default when the measured winner count fits) and the shuffle-join
-    # fallback (production epochs above the broadcast threshold)
+
+    def winners(df):
+        return {r["doc_id"]: (r["lsn"], r["tokens"], r["_c"], r["_d"]) for r in df.collect()}
+
+    want = {"a": (3, [3], 4, 3), "b": (5, [5], 2, 1), "c": (4, [4], 1, 1)}
+    assert winners(latest_by_key_salted(ev, "doc_id", "lsn", 4, count_col="_c", distinct_col="_d")) == want
+    # broadcast_max_rows picks the plan: 3 winners fit 10 (broadcast join),
+    # None skips the probe (shuffle join), 0 cannot hold them (salted)
     cleanup: list = []
-    b = latest_by_key_join(
-        ev, "doc_id", "lsn", count_col="_c", distinct_col="_d", cleanup=cleanup
-    )
-    c = latest_by_key_join(
-        ev,
-        "doc_id",
-        "lsn",
-        count_col="_c",
-        distinct_col="_d",
-        broadcast_max_rows=0,
-        cleanup=cleanup,
-    )
-    ka = {r["doc_id"]: (r["lsn"], r["tokens"], r["_c"], r["_d"]) for r in a.collect()}
-    kb = {r["doc_id"]: (r["lsn"], r["tokens"], r["_c"], r["_d"]) for r in b.collect()}
-    kc = {r["doc_id"]: (r["lsn"], r["tokens"], r["_c"], r["_d"]) for r in c.collect()}
-    assert ka == kb == kc == {
-        "a": (3, [3], 4, 3),
-        "b": (5, [5], 2, 1),
-        "c": (4, [4], 1, 1),
-    }
-    assert len(cleanup) == 2  # persisted winner handles surfaced to the caller
+    for max_rows, variant in ((10, "join"), (None, "join"), (0, "salted")):
+        chosen: dict = {}
+        got = latest_by_key_auto(
+            ev, "doc_id", "lsn", n_salts=4, count_col="_c", distinct_col="_d",
+            broadcast_max_rows=max_rows, cleanup=cleanup, chosen=chosen,
+        )
+        assert chosen["variant"] == variant and chosen["probed"] == (max_rows is not None)
+        assert winners(got) == want, max_rows
+    assert len(cleanup) == 2  # the probed winner frames, surfaced to the caller
     for h in cleanup:
         h.unpersist()

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
 from clin_variant_etl_spark.lake import table as table_mod
 from clin_variant_etl_spark.lake.table import _collect_parquet_stats
-from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
+from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA, INTERNAL_LAST_LSN
 from clin_variant_etl_spark.testgen import (
     EventGenConfig,
     generate_change_events,
@@ -24,14 +24,7 @@ from clin_variant_etl_spark.testgen import (
 @pytest.fixture()
 def part_stats_pipeline(spark, tmp_path):
     create_cdc_table(str(tmp_path / "t"), BASE_DOCS_SCHEMA, n_buckets=4)
-    return CdcPipeline(
-        spark,
-        str(tmp_path / "t"),
-        lineage_path=str(tmp_path / "lin"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        n_salts=2,
-        collect_part_stats=True,
-    )
+    return CdcPipeline(spark, str(tmp_path / "t"), n_salts=2, collect_part_stats=True)
 
 
 def test_footer_lineage_no_extra_scan(spark, tmp_path, part_stats_pipeline):
@@ -45,31 +38,28 @@ def test_footer_lineage_no_extra_scan(spark, tmp_path, part_stats_pipeline):
         # footer-derived lineage must not add any phase before dedup
         assert "scan_offsets" not in (res.phase_ms or {})
 
-    lin = part_stats_pipeline.lineage.read(spark).toPandas()
-    per_file = lin[lin.partition_id >= 0]
-    summary = lin[lin.partition_id == -1]
-    # one lineage row per written data file, rows summing to the table delta
-    snap = part_stats_pipeline.table.current_snapshot()
-    assert len(per_file[per_file.epoch_id == 1]) >= 1
+    pipe = part_stats_pipeline
+    ep1 = pipe.epoch_log()[1]
+    assert ep1["epoch_id"] == 1
+    # per-file lineage: the manifest entries epoch 1's commit added, each
+    # with its footer-derived lsn coverage and row count
+    snap = pipe.table.snapshot(ep1["snapshot_id"])
+    per_file = pipe.table.added_files(snap.snapshot_id, since=snap.parent_id)
+    assert len(per_file) >= 1
+    assert all(INTERNAL_LAST_LSN in e["stats"] and e["rows"] > 0 for e in per_file)
     # per-file lsn coverage comes from footers: bounds must bracket the
     # actual _last_lsn values in the current table state
-    state = part_stats_pipeline.table.read(spark)
+    state = pipe.table.read(spark)
     lo, hi = state.agg(F.min("_last_lsn"), F.max("_last_lsn")).first()
-    ep1 = per_file[per_file.epoch_id == 1]
-    assert ep1.source_offset_min.min() >= lo - 0  # footer mins are real lsns
-    assert ep1.source_offset_max.max() == hi
-    # the summary row + checkpoint still record SOURCE offsets (observe-fed)
+    assert min(e["stats"][INTERNAL_LAST_LSN][0] for e in per_file) >= lo  # footer mins are real lsns
+    assert max(e["stats"][INTERNAL_LAST_LSN][1] for e in per_file) == hi
+    # the epoch record still holds SOURCE offsets (observe-fed)
     ev_all = tbl.to_pandas()
     ep1_src = ev_all[ev_all.epoch_hint == 1]
-    s1 = summary[summary.epoch_id == 1].iloc[0]
-    assert s1.source_offset_min == ep1_src.lsn.min()
-    assert s1.source_offset_max == ep1_src.lsn.max()
-    ck = part_stats_pipeline.checkpoint.read(spark).toPandas()
-    c1 = ck[ck.epoch_id == 1].iloc[0]
-    assert c1.source_min_lsn == ep1_src.lsn.min()
-    assert c1.source_max_lsn == ep1_src.lsn.max()
-    # manifest entries themselves carry the stats (pruning metadata)
-    assert any("stats" in e for e in snap.files)
+    assert ep1["source_min_lsn"] == ep1_src.lsn.min()
+    assert ep1["source_max_lsn"] == ep1_src.lsn.max()
+    info = pipe.resume_info()["epochs"][1]
+    assert (info["min_lsn"], info["max_lsn"]) == (ep1_src.lsn.min(), ep1_src.lsn.max())
 
 
 def _write_tiny(path, lo, hi):

@@ -211,3 +211,28 @@ def test_snapshot_without_manifests_fails_loudly(spark, tmp_path):
     with pytest.raises(KeyError, match="manifests"):
         LakeTable(str(tmp_path / "t_nomanifests")).read(spark)
 
+
+
+def test_commit_summary_is_per_commit_and_required(spark, tmp_path):
+    """``properties`` are inherited by child snapshots; a commit's
+    ``summary`` belongs to that commit alone, survives the JSON round trip,
+    and a snapshot file without one is rejected."""
+    import json
+
+    from clin_variant_etl_spark.lake import table as _tbl
+
+    t = _mk(spark, tmp_path / "t_summary")
+    first = t.commit("append", [], properties={"gate": "1"}, summary={"epoch_id": 1, "n": None})
+    second = t.commit("append", [])
+    _tbl._SNAP_CACHE.clear()
+    assert t.snapshot(first.snapshot_id).summary == {"epoch_id": 1, "n": None}
+    assert t.snapshot(second.snapshot_id).summary == {}
+    assert t.snapshot(second.snapshot_id).properties["gate"] == "1"
+
+    broken = t.snapshot(second.snapshot_id).to_json()
+    del broken["summary"]
+    with open(os.path.join(t.meta_dir, f"v{second.snapshot_id:08d}.json"), "w") as fh:
+        json.dump(broken, fh)
+    _tbl._SNAP_CACHE.clear()
+    with pytest.raises(KeyError, match="summary"):
+        LakeTable(str(tmp_path / "t_summary")).read(spark)

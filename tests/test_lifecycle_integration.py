@@ -55,7 +55,7 @@ def test_stream_mor_compact_publish_qc_resume(spark, tmp_path):
     mock_source.register(spark)
     tdir, ckpt = str(tmp_path / "t"), str(tmp_path / "ck")
     create_cdc_table(tdir, BASE_DOCS_SCHEMA, n_buckets=4)
-    pipe = CdcPipeline(spark, tdir, lineage_path=tdir + "_lin", apply_mode="mor")
+    pipe = CdcPipeline(spark, tdir, apply_mode="mor")
 
     # two streamed epochs of mor delta commits
     _run(spark, pipe, ckpt, 400)

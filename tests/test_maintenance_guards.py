@@ -1,6 +1,6 @@
 """Concurrency/determinism guards added in round 3: conflict-guarded
 compaction, lock-free versioned refs, snapshot-cache eviction on expiry, and
-the opt-in payload-consistency assertion in the join-dedup variant."""
+the opt-in payload-consistency assertion of the auto dedup."""
 
 from __future__ import annotations
 
@@ -10,10 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from clin_variant_etl_spark.engine.dedup import (
-    assert_payload_consistency,
-    latest_by_key_join,
-)
+from clin_variant_etl_spark.engine.dedup import assert_payload_consistency, latest_by_key_auto
 from clin_variant_etl_spark.lake.maintenance import compact, expire_snapshots
 from clin_variant_etl_spark.lake.table import CommitConflict, LakeTable, PartitionField
 
@@ -91,11 +88,11 @@ def test_payload_consistency_assertion(spark):
         [(1, 10, "a"), (1, 10, "a"), (1, 11, "b")], "k long, lsn long, p string"
     )
     assert_payload_consistency(good, "k", "lsn")  # no raise
-    out = latest_by_key_join(good, "k", "lsn", check_payload_consistency=True).collect()
+    out = latest_by_key_auto(good, "k", "lsn", check_payload_consistency=True).collect()
     assert [(r["k"], r["lsn"], r["p"]) for r in out] == [(1, 11, "b")]
 
     corrupt = spark.createDataFrame(
         [(1, 10, "a"), (1, 10, "DIFFERENT")], "k long, lsn long, p string"
     )
     with pytest.raises(ValueError, match="payload-consistency violation"):
-        latest_by_key_join(corrupt, "k", "lsn", check_payload_consistency=True).collect()
+        latest_by_key_auto(corrupt, "k", "lsn", check_payload_consistency=True).collect()

@@ -8,7 +8,6 @@ state as the replay oracle.
 """
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
 from clin_variant_etl_spark.engine.oracle import canonical_rows, replay_oracle
@@ -37,7 +36,7 @@ def test_redelivery_across_restart_matches_oracle(spark, tmp_path):
     mock_source.register(spark)
     tdir, ckpt = str(tmp_path / "docs"), str(tmp_path / "ckpt")
     create_cdc_table(tdir, BASE_DOCS_SCHEMA, n_buckets=4)
-    pipe = CdcPipeline(spark, tdir, lineage_path=tdir + "_lin")
+    pipe = CdcPipeline(spark, tdir)
 
     # three runs against a GROWING log, restarting from the same checkpoint:
     # each restart's first batch rewinds OVERLAP seqs behind the committed
@@ -57,12 +56,7 @@ def test_redelivery_across_restart_matches_oracle(spark, tmp_path):
 
     # the redelivered windows were actually delivered AND dropped as exact
     # duplicates by the engine (not silently skipped by the source)
-    lin = (
-        pipe.lineage.read(spark)
-        .where(F.col("partition_id") == -1)
-        .orderBy("epoch_id")
-        .collect()
-    )
+    lin = pipe.epoch_log()
     assert [r["epoch_id"] for r in lin] == [0, 1, 2]
     assert lin[0]["event_count"] == 500
     # runs 2 and 3 deliver their range + the OVERLAP rewind

@@ -30,6 +30,22 @@ from clin_variant_etl_spark.testgen import (
 )
 
 
+@pytest.fixture(autouse=True)
+def _restore_session_conf(spark):
+    """``main`` calls ``build_session``, whose ``getOrCreate`` re-applies its
+    defaults (e.g. 32 shuffle partitions) to the shared test session; put
+    back every runtime conf a test changed so later modules see the
+    session's own settings."""
+    before = dict(spark.conf.getAll)
+    yield
+    for k, v in spark.conf.getAll.items():
+        if before.get(k) != v and spark.conf.isModifiable(k):
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)
+
+
 @pytest.fixture(scope="module")
 def cli_env(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("run_cli")
@@ -43,8 +59,6 @@ def cli_env(spark, tmp_path_factory):
         "events_pdf": tbl.to_pandas(),
         "table": os.path.join(root, "docs"),
         "ckpt": os.path.join(root, "ckpt"),
-        "lineage": os.path.join(root, "lineage"),
-        "epochs": os.path.join(root, "epochs"),
     }
 
 
@@ -52,8 +66,6 @@ def _drain_args(e):
     base = {
         "--events-dir": e["events"],
         "--table": e["table"],
-        "--lineage": e["lineage"],
-        "--checkpoint-table": e["epochs"],
         "--stream-checkpoint": e["ckpt"],
         "--apply-mode": "mor",
         "--n-buckets": "4",
@@ -141,8 +153,6 @@ def test_drain_with_key_blooms_then_lookup_mode(spark, cli_env, capsys):
     argv = _drain_args(cli_env)
     argv[argv.index("--table") + 1] = os.path.join(root, "docs_bloomed")
     argv[argv.index("--stream-checkpoint") + 1] = os.path.join(root, "ckpt_bloomed")
-    argv[argv.index("--checkpoint-table") + 1] = os.path.join(root, "epochs_bloomed")
-    argv[argv.index("--lineage") + 1] = os.path.join(root, "lineage_bloomed")
     assert main(argv + ["--key-blooms"]) == 0
     t = LakeTable(os.path.join(root, "docs_bloomed"))
     assert all("doc_id" in (e.get("blooms") or {}) for e in t.current_snapshot().files)
@@ -181,8 +191,6 @@ def test_lookup_by_col_mode(spark, cli_env, capsys):
     argv = _drain_args(cli_env)
     argv[argv.index("--table") + 1] = os.path.join(root, "docs_pb")
     argv[argv.index("--stream-checkpoint") + 1] = os.path.join(root, "ckpt_pb")
-    argv[argv.index("--checkpoint-table") + 1] = os.path.join(root, "epochs_pb")
-    argv[argv.index("--lineage") + 1] = os.path.join(root, "lineage_pb")
     assert main(argv + ["--key-blooms", "--bloom-cols", "n_tok"]) == 0
     t = LakeTable(os.path.join(root, "docs_pb"))
     assert all(
@@ -217,8 +225,6 @@ def test_identity_respec_keeps_the_cli_key(spark, cli_env, capsys):
     argv = _drain_args(cli_env)
     argv[argv.index("--table") + 1] = table
     argv[argv.index("--stream-checkpoint") + 1] = os.path.join(root, "ckpt_respec")
-    argv[argv.index("--checkpoint-table") + 1] = os.path.join(root, "epochs_respec")
-    argv[argv.index("--lineage") + 1] = os.path.join(root, "lineage_respec")
     assert main(argv) == 0
     t = LakeTable(table)
     update_partitioning(spark, t, [PartitionField("source", "source")])

@@ -16,12 +16,7 @@ from clin_variant_etl_spark.testgen import (
 @pytest.fixture()
 def pipeline(spark, tmp_path):
     create_cdc_table(str(tmp_path / "docs"), BASE_DOCS_SCHEMA, n_buckets=8)
-    return CdcPipeline(
-        spark,
-        str(tmp_path / "docs"),
-        lineage_path=str(tmp_path / "lineage"),
-        checkpoint_path=str(tmp_path / "ckpt_table"),
-    )
+    return CdcPipeline(spark, str(tmp_path / "docs"))
 
 
 def _stream(spark, pipeline, tmp_path, **kw):

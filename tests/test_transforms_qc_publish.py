@@ -141,13 +141,7 @@ def test_compact_per_partition_selection_and_binpack(spark, tmp_path):
 # ------------------------------------------------------------ qc runner
 def test_qc_green_on_consistent_table(spark, tmp_path):
     create_cdc_table(str(tmp_path / "docs"), BASE_DOCS_SCHEMA, n_buckets=4)
-    pipe = CdcPipeline(
-        spark,
-        str(tmp_path / "docs"),
-        lineage_path=str(tmp_path / "lin"),
-        checkpoint_path=str(tmp_path / "ck"),
-        n_salts=4,
-    )
+    pipe = CdcPipeline(spark, str(tmp_path / "docs"), n_salts=4)
     cfg = EventGenConfig(n_docs=60, n_events=900, n_epochs=3, seed=77)
     tbl = generate_change_events(cfg)
     write_events_by_epoch(tbl, str(tmp_path / "events"))
