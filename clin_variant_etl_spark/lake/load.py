@@ -12,18 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..schemas import merge_schemas, same_shape
+from ..schemas import align_frame, merge_schemas, same_shape
 from .table import LakeTable, Snapshot
-
-
-def _align(df: DataFrame, schema) -> DataFrame:
-    have = {f.name for f in df.schema.fields}
-    return df.select(
-        *[
-            (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in schema.fields
-        ]
-    )
 
 
 def _evolved_schema(table: LakeTable, df: DataFrame):
@@ -38,7 +28,7 @@ def overwrite(spark: SparkSession, table: LakeTable, df: DataFrame, properties=N
     """Truncate-and-replace (reference: OverWrite, e.g. enriched_clinical)."""
     schema, evolved = _evolved_schema(table, df)
     snap = table.current_snapshot()
-    files = table.write_data_files(_align(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, snap.partition_spec)
+    files = table.write_data_files(align_frame(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, snap.partition_spec)
     return table.commit("overwrite", files, replace_all=True, new_schema=schema if evolved else None, properties=properties)
 
 
@@ -48,12 +38,16 @@ def overwrite_partitions(spark: SparkSession, table: LakeTable, df: DataFrame, p
     etl/conf/EtlConfiguration.scala:120-121)."""
     schema, evolved = _evolved_schema(table, df)
     snap = table.current_snapshot()
+    spec = snap.partition_spec
     touched = table.partitions_of(df)
-    files = table.write_data_files(_align(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, snap.partition_spec)
+    files = table.write_data_files(align_frame(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, spec)
+    # an unpartitioned table is one partition: replace all of it, like
+    # Spark's dynamic overwrite
     return table.commit(
         "overwrite_partitions",
         files,
         replace_partitions=touched,
+        replace_all=not spec,
         new_schema=schema if evolved else None,
         properties=properties,
     )
@@ -73,17 +67,17 @@ def _merge_rewrite(
     schema, evolved = _evolved_schema(table, df)
     snap = table.current_snapshot()
     spec = snap.partition_spec
-    src = _align(df, schema)
+    src = align_frame(df, schema)
 
     if spec:
         touched = table.partitions_of(src)
         pfilter = {}
         for p in spec:
             pfilter[p.name] = {t[p.name] for t in touched}
-        target = _align(table.read(spark, partition_filter=pfilter), schema)
+        target = align_frame(table.read(spark, partition_filter=pfilter), schema)
     else:
         touched = None
-        target = _align(table.read(spark), schema)
+        target = align_frame(table.read(spark), schema)
 
     merged = row_resolver(src, target, keys, schema)
     files = table.write_data_files(merged, max(snap.schemas) + 1 if evolved else snap.schema_id, spec)

@@ -21,8 +21,6 @@ Exact-match discipline (the driver hash-compares values):
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -61,17 +59,7 @@ def query(name: str, oracle: str | None = None, survey: str = "", gate: bool = T
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    # Bench-only knob: the sf* fixtures are single-file/single-row-group
-    # parquet, i.e. ONE map split — heavy per-row work (shingling, md5
-    # signatures) then runs single-task no matter the core count.  At 100 TB
-    # a table has thousands of splits, so spreading is the realistic shape;
-    # correctness is unaffected (the shuffle is on the raw rows).
-    if os.environ.get("SPARK_GRAFT_SPREAD_SMALL_SCANS") == "1":
-        n = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < n:
-            df = df.repartition(n)
-    return df
+    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
 def all_queries(include_suite_only: bool = False) -> dict[str, QuerySpec]:

@@ -13,6 +13,8 @@ Mirrors the intent of the reference's global spark conf
 - corrected time parsing, UTC session TZ (duckdb-oracle comparability).
 - Arrow on for all pandas-UDF paths (zero per-row Python, north_star rule).
 - AQE on, incl. skew-join handling, on top of our explicit salting.
+- file split sizing (maxPartitionBytes / openCostInBytes) stays at Spark's
+  defaults; set it per session through ``extra_conf`` when needed.
 """
 
 from __future__ import annotations
@@ -54,9 +56,7 @@ def build_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -88,21 +88,7 @@ def build_session(
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Map-side parallelism floor: Spark packs small files into
-        # 128MB+4MB-open-cost splits, so a sandbox-scale input (tens of MB)
-        # collapses to 1-2 map tasks NO MATTER THE CORE COUNT — scans,
-        # shingling and map-side partial aggregation then cannot scale with
-        # executors.  At 100 TB the same setting balances split count vs task
-        # overhead; here the env knob lets the bench size splits to ≥ cores.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4194304"),
-        )
+        .config("spark.driver.memory", "8g")
         # Python-worker allocator posture: keep freed arena pages RESIDENT
         # (no trim, no mmap for big buffers) and route Arrow through the
         # system allocator so the same policy applies.  On lazily-backed VM

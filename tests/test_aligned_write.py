@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import tempfile
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 
@@ -195,3 +197,67 @@ def test_aligned_replay_shuffle_partitions_above_buckets(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert_state_equals(pipe.read_state(), replay_oracle(tbl.to_pandas()))
+
+
+def test_skew_guard_spreads_hot_bucket_end_to_end(spark):
+    """About 60% of the keys hash into one bucket of a 4-bucket table: the
+    measured-skew guard widens the merge to k files for the hot bucket, where
+    uniform keys would give k=1, in both apply modes, and the state stays
+    exact."""
+    from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
+    from clin_variant_etl_spark.engine.apply import _aligned_partition_count
+    from clin_variant_etl_spark.engine.oracle import assert_state_equals, replay_oracle
+    from clin_variant_etl_spark.lake.table import PartitionField
+    from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
+    from clin_variant_etl_spark.testgen import (
+        EventGenConfig,
+        generate_change_events,
+        write_events_by_epoch,
+    )
+
+    n_b, n_hot, n_cold = 4, 240, 160
+    pf = PartitionField("bucket", "doc_id", "bucket_m3", n_b)
+    cand = (
+        spark.range(4 * (n_hot + n_cold))
+        .select(F.concat(F.lit("key_"), F.col("id").cast("string")).alias("doc_id"))
+        .select("doc_id", pf.expr().alias("bucket"))
+        .toPandas()
+    )
+    hot = cand[cand.bucket == "0"].doc_id[:n_hot]
+    cold = cand[cand.bucket != "0"].doc_id[:n_cold]
+    pool = np.concatenate([hot.to_numpy(), cold.to_numpy()])
+    bucket_of = dict(zip(cand.doc_id, cand.bucket))
+
+    cfg = EventGenConfig(n_docs=len(pool), n_events=3000, n_epochs=3, hot_key_skew=0, seed=5)
+    tbl = generate_change_events(cfg)
+    # testgen names key i "doc_<i>": map it onto the i-th key of the pool
+    doc_idx = [int(d.removeprefix("doc_")) for d in tbl.column("doc_id").to_pylist()]
+    tbl = tbl.set_column(tbl.schema.get_field_index("doc_id"), "doc_id", pa.array(pool[doc_idx]))
+    events = tbl.to_pandas()
+    par = spark.sparkContext.defaultParallelism
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _aligned_partition_count(n_b, par, [100] * n_b, 100 * n_b, shuffle) == n_b
+
+    root = tempfile.mkdtemp(prefix="aligned_skew_")
+    ev_dir = os.path.join(root, "events")
+    write_events_by_epoch(tbl, ev_dir, 1)
+    for mode in ("cow", "mor"):
+        tpath = os.path.join(root, mode)
+        create_cdc_table(tpath, BASE_DOCS_SCHEMA, n_buckets=n_b)
+        pipe = CdcPipeline(spark, tpath, n_salts=2, apply_mode=mode)
+        for ep in range(cfg.n_epochs):
+            df = spark.read.parquet(os.path.join(ev_dir, f"epoch={ep}"))
+            keys = set(df.select("doc_id").distinct().toPandas().doc_id)
+            hist = [sum(bucket_of[d] == str(b) for d in keys) for b in range(n_b)]
+            assert hist[0] / len(keys) > 0.55, hist
+            k = _aligned_partition_count(n_b, par, hist, len(keys), shuffle) // n_b
+            assert k == 3, (mode, ep, hist)
+            res = pipe.apply_epoch(df, ep)
+            snap = pipe.table.snapshot(res.snapshot_id)
+            per_bucket: dict[str, int] = {}
+            for f in pipe.table.added_files(snap.snapshot_id, since=snap.parent_id):
+                b = f["partition"]["bucket"]
+                per_bucket[b] = per_bucket.get(b, 0) + 1
+            assert per_bucket["0"] == k, (mode, ep, per_bucket)
+            assert max(per_bucket.values()) <= k, (mode, ep, per_bucket)
+        assert_state_equals(pipe.read_state(), replay_oracle(events))

@@ -91,9 +91,36 @@ def test_schema_evolution_add_and_widen(spark, tmp_path):
     assert rows["d4"] == (40, "en")
 
 
-def test_overwrite_and_overwrite_partitions(spark, tmp_path):
-    # identity partitioning, like the reference's analysis_id partitions
-    spec = [PartitionField("source", "source", "identity")]
+def test_upsert_evolves_field_inside_array_of_struct(spark, tmp_path):
+    """A batch adding a field inside ``array<struct>`` evolves the table;
+    the old rows and a later batch without the field read it back as null."""
+    item = lambda *names: T.ArrayType(  # noqa: E731
+        T.StructType([T.StructField(n, T.IntegerType(), True) for n in names])
+    )
+    schema = lambda *names: T.StructType(  # noqa: E731
+        [T.StructField("k", T.StringType(), False), T.StructField("items", item(*names), True)]
+    )
+    t = LakeTable.create(str(tmp_path / "t_nested"), schema("a"), [])
+    t.commit("append", t.write_data_files(spark.createDataFrame([("k1", [(1,)])], schema("a")), 0, []))
+    upsert(spark, t, spark.createDataFrame([("k2", [(2, 20)])], schema("a", "b")), keys=["k"])
+    upsert(spark, t, spark.createDataFrame([("k3", [(3,)])], schema("a")), keys=["k"])
+    got = {r["k"]: [tuple(i) for i in r["items"]] for r in t.read(spark).collect()}
+    assert got == {"k1": [(1, None)], "k2": [(2, 20)], "k3": [(3, None)]}
+    assert t.schema == schema("a", "b")
+
+
+@pytest.mark.parametrize(
+    "spec, replaced",
+    [
+        # identity partitioning, like the reference's analysis_id partitions:
+        # the 'books' partition is replaced wholesale, others untouched
+        ([PartitionField("source", "source", "identity")], {"d1": 10, "d2b": 21, "d3": 30}),
+        # an unpartitioned table is one partition: all of it is replaced
+        ([], {"d2b": 21}),
+    ],
+    ids=["identity", "unpartitioned"],
+)
+def test_overwrite_and_overwrite_partitions(spark, tmp_path, spec, replaced):
     t = LakeTable.create(str(tmp_path / "t6"), SCHEMA, spec)
     df = spark.createDataFrame(
         [("d1", 10, "web"), ("d2", 20, "books"), ("d3", 30, "code")], SCHEMA
@@ -102,8 +129,7 @@ def test_overwrite_and_overwrite_partitions(spark, tmp_path):
     d2 = spark.createDataFrame([("d2b", 21, "books")], SCHEMA)
     overwrite_partitions(spark, t, d2)
     got = {r["doc_id"]: r["n_tok"] for r in t.read(spark).collect()}
-    # the 'books' partition was replaced wholesale; others untouched
-    assert got == {"d1": 10, "d2b": 21, "d3": 30}
+    assert got == replaced
     # idempotent replay: same batch again → same state (J2 pattern)
     overwrite_partitions(spark, t, d2)
     assert {r["doc_id"]: r["n_tok"] for r in t.read(spark).collect()} == got
