@@ -52,9 +52,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from ..lake.table import CommitConflict, LakeTable, PartitionField
+from ..lake.table import CommitConflict, LakeTable, PartitionField, keep_latest
 from ..schemas import INTERNAL_DELETED, INTERNAL_LAST_LSN, align_frame, merge_schemas, same_shape
-from .dedup import latest_by_key_auto, latest_by_key_salted
+from .dedup import latest_by_key_auto
 
 EVENT_META_COLS = ("lsn", "op", "event_ts", "epoch_hint")
 BUCKET_PARTITION = "bucket"
@@ -241,7 +241,8 @@ class CdcPipeline:
         resolve is applied whenever the pipeline runs in mor mode OR the
         snapshot says deltas may exist (``mor`` property, stamped by every
         mor commit); it is a semantic no-op on a 1-row-per-key table, so a
-        safety-resolve after compaction costs only the aggregation.
+        safety-resolve after compaction costs only the top-1 window
+        (``_read_resolved``).
         """
         df = self._read_resolved(snapshot_id)
         df = df.where(~F.coalesce(F.col(INTERNAL_DELETED), F.lit(False)))
@@ -362,8 +363,14 @@ class CdcPipeline:
         row_filter: F.Column | None = None,
     ) -> DataFrame:
         """One row per key INCLUDING internals (lsn, tombstones) — the mor
-        keep-max-LSN resolve applied when deltas may exist.  Filters are
-        applied BEFORE the resolve; callers must only pass filters that
+        keep-max-LSN resolve applied when deltas may exist.  The resolve is
+        ``lake.table.keep_latest``, a column-prunable top-1 window: a caller
+        that selects a few columns scans and shuffles only those.  Unlike
+        event dedup it needs no salting: a data file holds at most one row
+        per key, so a key has at most 1 + (delta files) versions.  Ties
+        cannot occur: a delta row is appended only when its lsn strictly
+        beats the key's prior version.  Filters
+        are applied BEFORE the resolve; callers must only pass filters that
         keep every version of any key they keep (key-level predicates)."""
         snap = self.table.snapshot_at(snapshot_id)
         df = self.table.read(
@@ -375,7 +382,7 @@ class CdcPipeline:
         if row_filter is not None:
             df = df.where(row_filter)
         if self.apply_mode == "mor" or snap.properties.get("mor") == "1":
-            df = latest_by_key_salted(df, self.key_col, INTERNAL_LAST_LSN, self.n_salts)
+            df = keep_latest(df, self.key_col, INTERNAL_LAST_LSN)
         return df
 
     def read_changes(
@@ -422,8 +429,12 @@ class CdcPipeline:
           the retractable contribution; the old row's is)
 
         A key born and deleted inside the window emits nothing (net-zero
-        contribution).  Pre-image rows carry their OLD ``_last_lsn``.  Both
-        sides of the pre/post join are pruned to the changed buckets, so
+        contribution).  Pre-image rows carry their OLD ``_last_lsn`` and
+        payload, read in the ``to`` schema (columns added inside the window
+        are null).  The feed is ONE left join of the ``to`` resolve to the
+        ``from`` resolve, keeping keys whose lsn differs (the (key, lsn)
+        anti-join rule above), so each snapshot is scanned once, only for
+        the columns the consumer uses, and pruned to the changed buckets:
         cost stays O(changed buckets).
         """
         to_snap = self.table.snapshot_at(to_snapshot_id)
@@ -439,12 +450,14 @@ class CdcPipeline:
         if spec and all(p.name in f["partition"] for p in spec for f in fresh):
             pf = {p.name: {f["partition"][p.name] for f in fresh} for p in spec}
         new_state = self._read_resolved(to_snap.snapshot_id, partition_filter=pf)
-        if from_snapshot_id is not None:
-            old_pairs = self._read_resolved(from_snapshot_id, partition_filter=pf).select(
-                self.key_col, INTERNAL_LAST_LSN
-            )
-            new_state = new_state.join(old_pairs, [self.key_col, INTERNAL_LAST_LSN], "left_anti")
         if not include_pre_images:
+            if from_snapshot_id is not None:
+                old_pairs = self._read_resolved(from_snapshot_id, partition_filter=pf).select(
+                    self.key_col, INTERNAL_LAST_LSN
+                )
+                new_state = new_state.join(
+                    old_pairs, [self.key_col, INTERNAL_LAST_LSN], "left_anti"
+                )
             return new_state.withColumn("_change_type", change_type).drop(INTERNAL_DELETED)
         if from_snapshot_id is None:
             # full history: every live key is a plain insert, nothing to retract
@@ -453,30 +466,38 @@ class CdcPipeline:
                 .withColumn("_change_type", F.lit("insert"))
                 .drop(INTERNAL_DELETED)
             )
-        old_vis = self._read_resolved(from_snapshot_id, partition_filter=pf)
-        old_vis = old_vis.where(~F.coalesce(F.col(INTERNAL_DELETED), F.lit(False))).drop(
-            INTERNAL_DELETED
+        # ONE left join of new to old (old projected onto the new schema, so
+        # an evolving epoch in the window aligns), keeping keys whose lsn
+        # moved — the (key, lsn) anti-join rule.  Each kept row then fans out
+        # to a post and a pre slot; the generator references no column, so
+        # column pruning still reaches both scans (a union of two filtered
+        # projections would get each branch's filter pushed into its own
+        # join and scan both snapshots twice).
+        old_state = align_frame(
+            self._read_resolved(from_snapshot_id, partition_filter=pf), new_state.schema
         )
-        chg_keys = new_state.select(
-            self.key_col,
-            F.coalesce(F.col(INTERNAL_DELETED), F.lit(False)).alias("__was_delete"),
+        n, o = new_state.alias("n"), old_state.alias("o")
+        key, lsn = self.key_col, INTERNAL_LAST_LSN
+        joined = n.join(o, F.col(f"n.{key}") == F.col(f"o.{key}"), "left").where(
+            ~F.col(f"n.{lsn}").eqNullSafe(F.col(f"o.{lsn}"))
         )
-        pre = old_vis.join(chg_keys, self.key_col, "inner")
-        pre_out = pre.withColumn(
-            "_change_type",
-            F.when(F.col("__was_delete"), F.lit("delete")).otherwise(F.lit("update_preimage")),
-        ).drop("__was_delete")
-        pre_keys = pre.select(self.key_col).withColumn("__had_pre", F.lit(True))
-        post = new_state.where(~deleted).drop(INTERNAL_DELETED)
-        post_out = (
-            post.join(pre_keys, self.key_col, "left")
-            .withColumn(
-                "_change_type",
-                F.when(F.col("__had_pre"), F.lit("update_postimage")).otherwise(F.lit("insert")),
+        new_live = ~F.coalesce(F.col(f"n.{INTERNAL_DELETED}"), F.lit(False))
+        old_live = F.col(f"o.{key}").isNotNull() & ~F.coalesce(
+            F.col(f"o.{INTERNAL_DELETED}"), F.lit(False)
+        )
+        post = F.col("__post")
+        ct = F.when(post, F.when(old_live, "update_postimage").otherwise("insert")).otherwise(
+            F.when(new_live, "update_preimage").otherwise("delete")
+        )
+        cols = [c for c in new_state.columns if c != INTERNAL_DELETED]
+        return (
+            joined.select("*", F.explode(F.array(F.lit(True), F.lit(False))).alias("__post"))
+            .where((post & new_live) | (~post & old_live))
+            .select(
+                *[F.when(post, F.col(f"n.{c}")).otherwise(F.col(f"o.{c}")).alias(c) for c in cols],
+                ct.alias("_change_type"),
             )
-            .drop("__had_pre")
         )
-        return post_out.unionByName(pre_out)
 
     def last_epoch_id(self) -> int:
         return int(self.table.properties().get("last_epoch_id", -1))

@@ -20,8 +20,9 @@ orderBy+dropDuplicates E5 pattern) from the MEASURED winner count:
   (``None``) it is a (key, lsn)-spread shuffle join;
 - ``latest_by_key_salted`` — two-phase max_by: pre-reduce per (key, salt)
   so a hot key's rows are first reduced in S parallel tasks, then the S
-  survivors reduce per key.  One pass over the payload, skew-proof; the
-  merge-on-read resolve (``CdcPipeline.read_state``) uses it directly.
+  survivors reduce per key.  One pass over the payload, skew-proof.  Event
+  dedup needs the salt (a hot key may repeat many times in one batch);
+  table reads do not, and resolve with ``lake.table.keep_latest``.
 
 See ``latest_by_key_auto``'s docstring for the cost model.
 """

@@ -25,6 +25,12 @@ Scale posture (the 100-TB contract):
   refresh rewrites ONLY the buckets owning changed groups
   (``commit(replace_partitions=…)``) — refresh cost ∝ changed groups, plus
   O(changed source buckets) for the feed read itself.
+- The feed read scans each of the two source snapshots once, for only the
+  key, lsn, tombstone, group and aggregated columns (the mor resolve is a
+  column-prunable top-1 window; pre/post images come from one join).  The
+  slim per-group delta is checkpointed once, and ONE probe job yields both
+  the touched MV buckets and the group count; then the bucket rewrite and
+  the commit.
 - Exactly-once: the source snapshot cursor (``mv_source_snapshot_id``) is a
   property of the MV table's OWN snapshot, so cursor-advance and data-commit
   are one atomic operation — a re-driven refresh of an already-folded window
@@ -139,6 +145,17 @@ class MaterializedAggregate:
         out.append(F.max(F.when(sign < 0, F.lit(1)).otherwise(F.lit(0))).alias("__retracted"))
         return out
 
+    def _feed_delta(self, feed: DataFrame) -> DataFrame:
+        """Per-group signed aggregate of one pre/post-image feed window."""
+        sign = F.when(
+            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+        ).otherwise(F.lit(-1))
+        return (
+            feed.withColumn("__sign", sign)
+            .groupBy(self._gkey_expr(feed).alias(_GKEY), *self.group_cols)
+            .agg(*self._delta_aggs(F.col("__sign")))
+        )
+
     def _state_schema_frame(self) -> DataFrame:
         """Empty frame with the MV's stored-state schema (used at create)."""
         src = self.pipeline.read_state().limit(0)
@@ -170,29 +187,23 @@ class MaterializedAggregate:
             to_snapshot_id=src_snap,
             include_pre_images=True,
         )
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        delta = (
-            feed.withColumn("__sign", sign)
-            .groupBy(self._gkey_expr(feed).alias(_GKEY), *self.group_cols)
-            .agg(*self._delta_aggs(F.col("__sign")))
-        )
         # the group-key domain is bounded (it is an aggregate's output), so a
         # localCheckpoint of the slim delta is cheap and avoids re-running the
         # feed scan for the bucket probe + merge + recompute branches
-        delta = delta.localCheckpoint(eager=True)
-        if delta.isEmpty():
+        delta = self._feed_delta(feed).localCheckpoint(eager=True)
+        # one probe job: the touched buckets and, summed, the group count
+        bucket_expr = F.pmod(F.hash(F.col(_GKEY)), F.lit(self.n_buckets)).cast("int")
+        per_bucket = {
+            r["b"]: r["count"] for r in delta.groupBy(bucket_expr.alias("b")).count().collect()
+        }
+        if not per_bucket:
             self.table.commit(
                 "mv_refresh", [], properties={"mv_source_snapshot_id": str(src_snap)},
                 expected_parent=mv_parent,
             )
             return {"refreshed": True, "from": cursor, "to": src_snap, "groups": 0}
 
-        bucket_expr = F.pmod(F.hash(F.col(_GKEY)), F.lit(self.n_buckets)).cast("int")
-        touched = sorted(
-            r[0] for r in delta.select(bucket_expr.alias("b")).distinct().collect()
-        )
+        touched = sorted(per_bucket)
         pf = {_BUCKET: {str(b) for b in touched}}
         old = self.table.read(self.spark, partition_filter=pf)
 
@@ -211,12 +222,11 @@ class MaterializedAggregate:
             properties={"mv_source_snapshot_id": str(src_snap)},
             expected_parent=mv_parent,
         )
-        n_groups = delta.count()
         return {
             "refreshed": True,
             "from": cursor,
             "to": src_snap,
-            "groups": n_groups,
+            "groups": sum(per_bucket.values()),
             "buckets": touched,
         }
 

@@ -8,10 +8,11 @@ Reference analogue: Delta ``compact`` (to ~100 files per chromosome) and
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
-from .table import LakeTable, Snapshot
+from .table import LakeTable, Snapshot, keep_latest
 
 
 def compact(
@@ -107,17 +108,10 @@ def compact(
 
     df = table.read(spark, snapshot_id=snap.snapshot_id, partition_filter=pfilter)
     if resolve_keep_latest is not None:
-        # keep-max-lsn per key (mor delta fold) — inline max_by(struct)
-        # (engine.dedup has richer variants, but lake/ must not import
-        # engine/); resolve BEFORE tombstone filtering so a tombstone only
+        # keep-max-lsn per key (mor delta fold), the rule the table reads
+        # apply; resolve BEFORE tombstone filtering so a tombstone only
         # survives if it is the key's latest version
-        k_col, l_col = resolve_keep_latest
-        others = [c for c in df.columns if c != k_col]
-        df = (
-            df.groupBy(k_col)
-            .agg(F.max_by(F.struct(*others), F.col(l_col)).alias("_w"))
-            .select(F.col(k_col), *[F.col(f"_w.{c}").alias(c) for c in others])
-        )
+        df = keep_latest(df, *resolve_keep_latest)
     if drop_tombstones and deleted_col in df.columns:
         dead = F.coalesce(df[deleted_col], F.lit(False))
         if lsn_horizon is not None and lsn_col in df.columns:
@@ -310,8 +304,18 @@ def fold_candidates(
     to ``compact(partitions=…)``.  Buckets with d = 0 are never selected,
     so a fully-folded table is a permanent no-op — safe to call every
     micro-batch.
+
+    The policy reads one partition column (the key bucket of a mor table):
+    an unpartitioned table returns ``[]``, and a multi-column spec warns,
+    naming the spec, and returns ``[]`` (nothing is folded).
     """
     spec = snap.partition_spec
+    if len(spec) > 1:
+        warnings.warn(
+            f"fold_candidates: multi-column partition spec "
+            f"{[p.to_json() for p in spec]} is not supported; nothing is folded",
+            stacklevel=2,
+        )
     if len(spec) != 1:
         return []
     by_part: dict[str, list[int]] = {}

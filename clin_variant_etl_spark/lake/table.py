@@ -51,7 +51,7 @@ import uuid
 import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..schemas import align_frame
 from .fsio import CommitConflict, FileIO, LocalFileIO  # noqa: F401 (re-export)
@@ -347,6 +347,23 @@ def _collect_parquet_stats(
         return p, (md.num_rows, stats, blooms)
 
     return dict(sc.parallelize(paths, n_slices).map(_footer).collect())
+
+
+def keep_latest(df: DataFrame, key_col: str, lsn_col: str) -> DataFrame:
+    """Keep each key's max-``lsn_col`` row: the merge-on-read resolve shared
+    by table reads (``CdcPipeline.read_state``) and delta folds
+    (``maintenance.compact(resolve_keep_latest=…)``).
+
+    A top-1 window (``row_number() == 1``), not ``max_by(struct(row))``:
+    Spark plans it as a partial ``WindowGroupLimit`` before the shuffle and
+    prunes the columns beneath it, so a caller that reads only a few
+    columns scans and shuffles only those.  No salting: a data file holds at
+    most one row per key, so a key has at most 1 + (delta files) versions.
+    Ties cannot occur: a mor delta row is appended only when its lsn
+    strictly beats the key's prior version.
+    """
+    w = Window.partitionBy(key_col).orderBy(F.col(lsn_col).desc())
+    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 @dataclass

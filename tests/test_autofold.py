@@ -82,6 +82,13 @@ def test_fold_candidates_ignores_unpartitioned_tables(tmp_path):
     assert fold_candidates(s) == []
 
 
+def test_fold_candidates_warns_on_multi_column_spec(tmp_path):
+    s = _snap(tmp_path, [("0", True), ("0", True)])
+    s.partition_spec = s.partition_spec + [PartitionField("src", "source")]
+    with pytest.warns(UserWarning, match="multi-column partition spec.*'src'"):
+        assert fold_candidates(s) == []
+
+
 def test_streaming_after_batch_autofold_bounds_deltas(spark, tmp_path):
     """Drain a mor stream with the auto_fold hook: visible state equals the
     replay oracle AND no bucket ends over the policy bound — without any

@@ -12,7 +12,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
+from clin_variant_etl_spark.engine import (
+    AggSpec,
+    CdcPipeline,
+    MaterializedAggregate,
+    create_cdc_table,
+)
 from clin_variant_etl_spark.lake.table import _stats_may_match
 from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
 from clin_variant_etl_spark.testgen import (
@@ -112,6 +117,26 @@ def test_read_changes_matches_replay(spark, tmp_path, mode):
     empty = pipe.read_changes(from_snapshot_id=snaps[3])
     assert empty.count() == 0 and "_change_type" in empty.columns
 
+    # pre/post-image feed: a post row per key whose new version is live, a
+    # pre row carrying the OLD lsn and payload per key live at ``from``
+    n_tok = dict(zip(pdf["lsn"], pdf["n_tok"]))
+    old = _last_versions(pdf, pdf["epoch_hint"] <= 1)
+    want = []
+    for k, (lsn, op) in _expected_diff(old, new).items():
+        was_live = k in old and old[k][1] == "upsert"
+        if op == "upsert":
+            want.append((k, lsn, "update_postimage" if was_live else "insert", n_tok[lsn]))
+        if was_live:
+            pre = "delete" if op == "delete" else "update_preimage"
+            want.append((k, old[k][0], pre, n_tok[old[k][0]]))
+    images = pipe.read_changes(snaps[1], snaps[3], include_pre_images=True)
+    got = [
+        (r["doc_id"], r["_last_lsn"], r["_change_type"], r["n_tok"])
+        for r in images.select("doc_id", "_last_lsn", "_change_type", "n_tok").collect()
+    ]
+    assert {t for _, _, t, _ in want} == {"insert", "update_postimage", "update_preimage", "delete"}
+    assert sorted(got) == sorted(want)
+
 
 def test_read_changes_prunes_to_touched_buckets(spark, tmp_path):
     """An epoch touching ONE key scans only that key's bucket on both sides."""
@@ -203,6 +228,42 @@ def test_read_changes_across_schema_evolution(spark, tmp_path, mode):
             assert row["lang"] is not None
         else:
             assert row["lang"] is None and row["quality"] is None
+
+
+def _parquet_scans(df) -> list[list[str]]:
+    """Column names each parquet scan of ``df``'s physical plan reads."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.length())]
+    return [
+        list(n.requiredSchema().fieldNames())
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
+def test_pre_image_feed_scans_each_snapshot_once_and_prunes(spark, tmp_path):
+    """The matview's delta aggregate over an incremental pre-image feed of a
+    mor table reads each snapshot ONCE and only the columns it aggregates:
+    the resolve is a prunable top-1 window (not ``max_by`` over the whole
+    row) and the pre/post rows come from one join (not a self-join union)."""
+    cfg = EventGenConfig(n_docs=80, n_events=800, n_epochs=3, seed=19)
+    tbl = generate_change_events(cfg)
+    src = str(tmp_path / "events")
+    write_events_by_epoch(tbl, src)
+    create_cdc_table(str(tmp_path / "docs"), BASE_DOCS_SCHEMA, n_buckets=4)
+    pipe = CdcPipeline(spark, str(tmp_path / "docs"), apply_mode="mor")
+    snaps = [
+        pipe.apply_epoch(spark.read.parquet(f"{src}/epoch={ep}"), epoch_id=ep).snapshot_id
+        for ep in range(3)
+    ]
+    mv = MaterializedAggregate(
+        pipe, str(tmp_path / "mv"), ["source"],
+        {"n_docs": AggSpec("count"), "total_tok": AggSpec("sum", "n_tok")}, n_buckets=4,
+    )
+    feed = pipe.read_changes(snaps[0], snaps[2], include_pre_images=True)
+    scans = _parquet_scans(mv._feed_delta(feed))
+    assert len(scans) == 2, scans
+    assert all("tokens" not in cols for cols in scans), scans
 
 
 def test_stats_may_match_string_stats_never_prune():

@@ -92,6 +92,20 @@ def test_mv_tracks_recompute_every_epoch(spark, tmp_path, mode):
         pd.testing.assert_frame_equal(_mv_frame(mv), _recompute(pipe))
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_mv_refresh_across_schema_evolving_epoch(spark, tmp_path, mode):
+    """A refresh whose window spans the epoch that adds (lang, quality):
+    the pre-images come from the pre-evolution snapshot and must be read
+    in the current schema, not fail to resolve the new columns."""
+    cfg = EventGenConfig(n_docs=120, n_events=1500, n_epochs=3, seed=29, v2_from_epoch=1)
+    src, pipe, mv = _setup(spark, tmp_path, mode, cfg)
+    for ep in range(3):
+        pipe.apply_epoch(spark.read.parquet(f"{src}/epoch={ep}"), epoch_id=ep)
+        assert mv.refresh()["refreshed"]
+        pd.testing.assert_frame_equal(_mv_frame(mv), _recompute(pipe))
+    assert "lang" in pipe.read_state().columns
+
+
 def test_mv_refresh_is_idempotent_and_batched(spark, tmp_path):
     """A second refresh with no new source snapshot is a no-op; one refresh
     spanning several epochs equals per-epoch refreshes (snapshot-window
