@@ -125,12 +125,6 @@ def _aligned_partition_count(
     return n_buckets * k
 
 
-def _align(df: DataFrame, fields) -> DataFrame:
-    # nested-aware alignment (missing nested fields → typed nulls) so an
-    # epoch can add a field INSIDE an array<struct> column mid-stream
-    return align_frame(df, T.StructType(list(fields)))
-
-
 @dataclass
 class ApplyResult:
     epoch_id: int
@@ -614,15 +608,19 @@ class CdcPipeline:
             estimate=self._net_estimate,
             chosen=variant_report,
         )
-        net = _align(
+        # nested-aware alignment (missing nested fields → typed nulls) so an
+        # epoch can add a field INSIDE an array<struct> column mid-stream
+        net = align_frame(
             net,
-            list(merged_payload.fields)
-            + [
-                T.StructField("lsn", T.LongType()),
-                T.StructField("op", T.StringType()),
-                T.StructField("_fold_cnt", T.LongType()),
-                T.StructField("_dst_cnt", T.LongType()),
-            ],
+            T.StructType(
+                merged_payload.fields
+                + [
+                    T.StructField("lsn", T.LongType()),
+                    T.StructField("op", T.StringType()),
+                    T.StructField("_fold_cnt", T.LongType()),
+                    T.StructField("_dst_cnt", T.LongType()),
+                ]
+            ),
         )
 
         spec = snap.partition_spec
@@ -787,7 +785,7 @@ class CdcPipeline:
                 # stats are `observe`d on the SAME plan, so the merge write
                 # is the only action — no separate stats job.
                 target = self.table.read(self.spark, partition_filter=pfilter)
-                target = _align(target, new_schema.fields)
+                target = align_frame(target, new_schema)
                 if aligned:
                     net_j = net.repartition(n_parts, self.key_col)
                     target = target.repartition(n_parts, self.key_col)
@@ -838,7 +836,6 @@ class CdcPipeline:
 
             files = self.table.write_data_files(
                 merged,
-                max(snap.schemas) + 1 if evolved else snap.schema_id,
                 spec,
                 # per-file lsn coverage from footers — rides the write the
                 # merge does anyway (executor-side above the file threshold)

@@ -210,11 +210,7 @@ class MaterializedAggregate:
         merged = self._merge(old, delta)
         merged = self._recompute_extrema(merged, delta, as_of=src_snap)
 
-        files = self.table.write_data_files(
-            merged.drop("__retracted"),
-            schema_id=self.table.current_snapshot().schema_id,
-            spec=self.table.partition_spec,
-        )
+        files = self.table.write_data_files(merged.drop("__retracted"), self.table.partition_spec)
         self.table.commit(
             "mv_refresh",
             files,

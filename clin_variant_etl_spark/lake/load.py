@@ -27,8 +27,7 @@ def _evolved_schema(table: LakeTable, df: DataFrame):
 def overwrite(spark: SparkSession, table: LakeTable, df: DataFrame, properties=None) -> Snapshot:
     """Truncate-and-replace (reference: OverWrite, e.g. enriched_clinical)."""
     schema, evolved = _evolved_schema(table, df)
-    snap = table.current_snapshot()
-    files = table.write_data_files(align_frame(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, snap.partition_spec)
+    files = table.write_data_files(align_frame(df, schema), table.partition_spec)
     return table.commit("overwrite", files, replace_all=True, new_schema=schema if evolved else None, properties=properties)
 
 
@@ -37,10 +36,9 @@ def overwrite_partitions(spark: SparkSession, table: LakeTable, df: DataFrame, p
     (reference: OverWritePartition/Dynamic on normalized_snv by analysis_id,
     etl/conf/EtlConfiguration.scala:120-121)."""
     schema, evolved = _evolved_schema(table, df)
-    snap = table.current_snapshot()
-    spec = snap.partition_spec
+    spec = table.partition_spec
     touched = table.partitions_of(df)
-    files = table.write_data_files(align_frame(df, schema), max(snap.schemas) + 1 if evolved else snap.schema_id, spec)
+    files = table.write_data_files(align_frame(df, schema), spec)
     # an unpartitioned table is one partition: replace all of it, like
     # Spark's dynamic overwrite
     return table.commit(
@@ -65,8 +63,7 @@ def _merge_rewrite(
     """Shared machinery for Upsert/Scd1: read only affected partitions, resolve
     source-vs-target rows, rewrite those partitions."""
     schema, evolved = _evolved_schema(table, df)
-    snap = table.current_snapshot()
-    spec = snap.partition_spec
+    spec = table.partition_spec
     src = align_frame(df, schema)
 
     if spec:
@@ -80,7 +77,7 @@ def _merge_rewrite(
         target = align_frame(table.read(spark), schema)
 
     merged = row_resolver(src, target, keys, schema)
-    files = table.write_data_files(merged, max(snap.schemas) + 1 if evolved else snap.schema_id, spec)
+    files = table.write_data_files(merged, spec)
     return table.commit(
         operation,
         files,

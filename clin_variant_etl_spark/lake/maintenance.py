@@ -31,19 +31,18 @@ def compact(
 ) -> Snapshot:
     """Small-files compaction with bin-packing and per-partition selection.
 
-    ``cluster_by`` (one or two columns; requires ``target_file_bytes``; two
-    columns = Z-ORDER — see the inline block for the interleave): instead of
-    spreading a partition's rows across its k output files by content hash,
-    RANGE-split them on this column so each file covers a narrow value span
-    and its manifest min/max (recorded via ``stats_cols``) actually prunes —
-    ``read(stats_filter=…)`` then opens O(selectivity) files instead of all
-    of them.  A hash split gives every file the full value range; clustering
-    is what makes stats skipping effective on a compacted table (Iceberg's
-    sort-order rewrite, Delta's OPTIMIZE ZORDER at 1 dimension).  The split
-    is a map-side boundary count against per-partition quantile cut points
-    computed ONCE and inlined as literals — no per-partition sort task (a
-    window/ntile formulation would funnel each partition through one task),
-    and retries can never recompute a different layout mid-job.
+    ``cluster_by`` (one or two columns; requires ``target_file_bytes``):
+    instead of spreading a partition's rows across its k output files by
+    content hash, split them on a z-order code so each file covers a narrow
+    span of every clustered column and its manifest min/max (recorded via
+    ``stats_cols``) actually prunes — ``read(stats_filter=…)`` then opens
+    O(selectivity) files instead of all of them.  A hash split gives every
+    file the full value range; clustering is what makes stats skipping
+    effective on a compacted table (Iceberg's sort-order rewrite, Delta's
+    OPTIMIZE ZORDER).  ONE split serves one and two columns: each column
+    is rank-coded on a per-partition 64-cell quantile grid, the codes are
+    bit-interleaved (one column: the code itself), and ``split = z*k >>
+    6n`` — see the inline block.
 
     Selection (reference compacts per chromosome, not whole tables —
     etl/normalized/Consequences.scala:135-138): only partitions with
@@ -151,32 +150,30 @@ def compact(
             total = _bytes(snap.files)
             k_expr = F.lit(max(1, -(-total // target_file_bytes)))
             pexpr = F.lit(0)
-        if cluster_by is not None and len(cluster_by) == 2:
-            # ---- 2-D Z-ORDER split (Iceberg/Delta OPTIMIZE ZORDER at 2
-            # dims; reference's canonical layout is 2-D (chromosome, start),
+        if cluster_by is not None:
+            if len(cluster_by) not in (1, 2):
+                raise ValueError("cluster_by supports one column (range) or two (z-order)")
+            # ---- one split for both (Iceberg/Delta OPTIMIZE ZORDER; the
+            # reference's canonical layout is 2-D (chromosome, start),
             # enriched/Variants.scala:124).  Each column is rank-coded onto
             # a 64-cell per-partition quantile grid (equal row mass per
-            # cell by construction), the two 6-bit codes are bit-interleaved
-            # into a 12-bit z-value, and files take contiguous z-ranges —
-            # so every output file covers a small RECTANGLE in (c1, c2)
-            # space and carries narrow min/max stats for BOTH columns
-            # (stats_cols below): a 2-predicate ``read(stats_filter=…)``
-            # prunes on both, where a 1-D cluster leaves the second
-            # column's per-file range full-width.
-            #
-            # No second quantile pass: because the codes are quantile
-            # RANKS, z is ~uniform over [0, 4096), so the file split is
-            # simply z*k >> 12 — contiguous, balanced, and (like the 1-D
-            # path) computed from literals collected once, safe under task
-            # retries.  One collect action total (both columns' grids in a
-            # single agg).
-            ZBITS, ZGRID = 6, 64
+            # cell by construction) and the 6-bit codes are bit-interleaved
+            # into a z-value (one column: the code itself).  Because the
+            # codes are quantile RANKS, z is ~uniform over [0, 64^n), so
+            # files take contiguous z-ranges with split = z*k >> 6n: with
+            # one column each file covers a narrow value span, with two a
+            # small RECTANGLE, and min/max stats (stats_cols below) prune
+            # on every clustered column.  The grids are collected ONCE (one
+            # agg over all columns) and inlined as literals: the split is a
+            # map-side count with no per-partition sort task (a window/ntile
+            # would funnel each partition through one task), and retries
+            # can never recompute a different layout mid-job.
+            n, ZBITS, ZGRID = len(cluster_by), 6, 64
             zprobs = [i / ZGRID for i in range(1, ZGRID)]
-            grp = (pexpr.cast("string") if selective else F.lit("0")).alias("_p")
             key = pexpr.cast("string") if selective else F.lit("0")
             grows = {
-                r["_p"]: [r["_g0"], r["_g1"]]
-                for r in df.groupBy(grp)
+                r["_p"]: [r[f"_g{i}"] for i in range(n)]
+                for r in df.groupBy(key.alias("_p"))
                 .agg(
                     *[
                         F.percentile_approx(F.col(c), zprobs, 10_000).alias(f"_g{i}")
@@ -185,7 +182,7 @@ def compact(
                 )
                 .collect()
             }
-            codes = []
+            z = F.lit(0)
             for i, c in enumerate(cluster_by):
                 dtype = df.schema[c].dataType.simpleString()
                 bmap = F.create_map(
@@ -194,62 +191,23 @@ def compact(
                         for p, grids in sorted(grows.items())
                         for x in (
                             F.lit(p),
-                            F.array(*[F.lit(v) for v in (grids[i] or [])])
+                            F.array(*[F.lit(v) for v in grids[i]])
                             if grids[i]
                             else F.array().cast(f"array<{dtype}>"),
                         )
                     ]
                 )
-                # rank code 0..63; null column values code to 0 (filter
-                # treats the null comparison as false) — deterministic
-                codes.append(
-                    F.size(F.filter(F.element_at(bmap, key), lambda b: F.col(c) > b))
+                # rank code 0..63; a null column value or a partition
+                # missing from the map codes to 0 — deterministic
+                code = F.coalesce(
+                    F.size(F.filter(F.element_at(bmap, key), lambda b: F.col(c) > b)),
+                    F.lit(0),
                 )
-            z = F.lit(0)
-            for i in range(ZBITS):
-                z = (
-                    z
-                    + F.shiftleft(F.shiftright(codes[0], i).bitwiseAND(F.lit(1)), 2 * i + 1)
-                    + F.shiftleft(F.shiftright(codes[1], i).bitwiseAND(F.lit(1)), 2 * i)
-                )
-            split = F.shiftright(z * k_expr, 2 * ZBITS)
-        elif cluster_by is not None:
-            if len(cluster_by) != 1:
-                raise ValueError("cluster_by supports one column (range) or two (z-order)")
-            c = cluster_by[0]
-            # range split WITHOUT a per-partition sort task: per-partition
-            # quantile boundaries are computed once in a separate action,
-            # collected, and inlined as literals — the split itself is then
-            # a map-side boundary count (fully parallel; a window/ntile
-            # formulation would funnel each partition through ONE task).
-            # Literal boundaries are also what makes retries safe: write
-            # tasks can never recompute a different layout mid-job.
-            GRID = 64  # boundary resolution; k_p <= GRID boundaries reused
-            probs = [i / GRID for i in range(1, GRID)]
-            grp = (pexpr.cast("string") if selective else F.lit("0")).alias("_p")
-            brows = {
-                r["_p"]: r["_q"]
-                for r in df.groupBy(grp)
-                .agg(F.percentile_approx(F.col(c), probs, 10_000).alias("_q"))
-                .collect()
-            }
-            if selective:
-                k_for = {p: k_of.get(p, 1) for p in brows}
-            else:
-                k_all = max(1, -(-_bytes(snap.files) // target_file_bytes))
-                k_for = {p: k_all for p in brows}
-            bounds_map_items = []
-            for p, grid in brows.items():
-                k_p = min(k_for.get(p, 1), GRID)
-                cuts = [grid[j * GRID // k_p - 1] for j in range(1, k_p)] if grid else []
-                bounds_map_items.append(
-                    (F.lit(p), F.array(*[F.lit(v) for v in cuts]) if cuts
-                     else F.array().cast(f"array<{df.schema[c].dataType.simpleString()}>"))
-                )
-            bmap = F.create_map(*[x for kv in bounds_map_items for x in kv])
-            key = pexpr.cast("string") if selective else F.lit("0")
-            my_bounds = F.element_at(bmap, key)
-            split = F.size(F.filter(my_bounds, lambda b: F.col(c) > b))
+                for bit in range(ZBITS):
+                    z = z + F.shiftleft(
+                        F.shiftright(code, bit).bitwiseAND(F.lit(1)), n * bit + n - 1 - i
+                    )
+            split = F.shiftright(z * k_expr, n * ZBITS)
         else:
             split = F.pmod(row_hash, k_expr)
 
@@ -268,8 +226,7 @@ def compact(
         sorted({c for e in rewritten_inputs for c in (e.get("blooms") or {})})
     )
     files = table.write_data_files(
-        df, snap.schema_id, spec, split_expr=split, stats_cols=stats_cols,
-        bloom_cols=bloom_cols,
+        df, spec, split_expr=split, stats_cols=stats_cols, bloom_cols=bloom_cols
     )
     if selective:
         return table.commit(

@@ -81,7 +81,7 @@ def rename_column(spark: SparkSession, table: LakeTable, path: str, new_name: st
     assert isinstance(new_schema, T.StructType)
     df = table.read(spark)
     out = _align_to(df, new_schema)
-    files = table.write_data_files(out, _next_schema_id(table), table.partition_spec)
+    files = table.write_data_files(out, table.partition_spec)
     return table.commit("rename_column", files, replace_all=True, new_schema=new_schema)
 
 
@@ -98,7 +98,7 @@ def drop_column(spark: SparkSession, table: LakeTable, path: str) -> Snapshot:
         out = df.withColumn(parts[0], _drop_expr(df.schema[parts[0]].dataType, F.col(parts[0]), parts[1:]))
         out = out.select(*[f.name for f in new_schema.fields])
     out = _align_to(out, new_schema)
-    files = table.write_data_files(out, _next_schema_id(table), table.partition_spec)
+    files = table.write_data_files(out, table.partition_spec)
     return table.commit("drop_column", files, replace_all=True, new_schema=new_schema)
 
 
@@ -112,10 +112,6 @@ def _drop_expr(dt: T.DataType, col: F.Column, path: list[str]) -> F.Column:
             return col.withField(head, _drop_expr(inner, col.getField(head), rest))
         return col.dropFields(head)
     raise ValueError(f"path {path} does not resolve inside {dt.simpleString()}")
-
-
-def _next_schema_id(table: LakeTable) -> int:
-    return max(table.current_snapshot().schemas) + 1
 
 
 def update_partitioning(spark: SparkSession, table: LakeTable, new_spec) -> Snapshot:
@@ -132,9 +128,7 @@ def update_partitioning(spark: SparkSession, table: LakeTable, new_spec) -> Snap
     bloom_cols = tuple(
         sorted({c for e in snap.files for c in (e.get("blooms") or {})})
     )
-    files = table.write_data_files(
-        df, snap.schema_id, new_spec, bloom_cols=bloom_cols
-    )
+    files = table.write_data_files(df, new_spec, bloom_cols=bloom_cols)
     return table.commit(
         "update_partitioning",
         files,

@@ -46,17 +46,23 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 import uuid
 import warnings
 from dataclasses import dataclass, field
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..schemas import align_frame
 from .fsio import CommitConflict, FileIO, LocalFileIO  # noqa: F401 (re-export)
 
 _DEFAULT_IO = LocalFileIO()
+
+# executor tasks call this module's footer reader without importing the
+# package: cloudpickle serializes its functions by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # driver-side footer reads are cheaper than a Spark job below this file
 # count; above it, per-file row counts + column stats are collected
@@ -124,8 +130,10 @@ def _read_footer_stats(
     min/max is a metadata-only footer read (no data pages); ``bloom_cols``
     additionally reads JUST those columns' pages to build manifest blooms —
     a narrow-column scan of a file the writer just produced (page cache
-    warm), paid only when the table opts in.  Self-contained so it can run
-    inside an executor task (imports inside the function body)."""
+    warm), paid only when the table opts in.  Runs on the driver and, via
+    ``_collect_parquet_stats``, inside executor tasks: its imports are in
+    the function bodies and cloudpickle ships it (with ``_build_bloom``) by
+    value."""
     import pyarrow.parquet as _pq
 
     pf = _pq.ParquetFile(path)
@@ -279,74 +287,20 @@ def _collect_parquet_stats(
     """Per-file (rows, column min/max, column blooms) for every path.
 
     ≤ EXECUTOR_STATS_THRESHOLD files: driver-side loop (cheaper than a job).
-    Above: one Spark job fans the footer reads over executors and collects
-    only the tiny stats tuples — the driver's serial work stays O(1) per
-    file *entry*, never O(files) footer round-trips.
+    Above: one Spark job fans the same ``_read_footer_stats`` over executors
+    and collects only the tiny stats tuples — the driver's serial work stays
+    O(1) per file *entry*, never O(files) footer round-trips.  This module
+    is registered with cloudpickle by value, so executors need no import of
+    the package.
     """
     if len(paths) <= EXECUTOR_STATS_THRESHOLD:
         return {p: _read_footer_stats(p, stats_cols, bloom_cols) for p in paths}
     sc = spark.sparkContext
     n_slices = min(len(paths), sc.defaultParallelism * 2)
-
-    # nested closure → cloudpickle serializes it BY VALUE, so executors
-    # don't need this repo on sys.path (same convention as the pandas UDFs).
-    # The bloom build is INLINED (not a call to module-level _build_bloom)
-    # for the same reason; tests/test_bloom_lookup.py pins the two
-    # implementations bit-for-bit equal.
-    def _footer(p, _cols=tuple(stats_cols), _bcols=tuple(bloom_cols)):
-        import base64 as _b64
-        import hashlib as _hashlib
-        import zlib as _zlib
-
-        import pyarrow.parquet as _pq
-
-        pf = _pq.ParquetFile(p)
-        md = pf.metadata
-        blooms = {}
-        # row-count gate mirrors BLOOM_MAX_ROWS (no column read past the cap)
-        for c in _bcols if md.num_rows <= (1 << 19) // 10 else ():
-            if c not in pf.schema_arrow.names:
-                continue
-            values = pf.read(columns=[c]).column(c).to_pylist()
-            n = len(values)
-            m = 1 << max(10, (n * 10 - 1).bit_length() if n else 10)
-            if m > (1 << 19):
-                continue
-            arr = bytearray(m // 8)
-            for v in values:
-                if v is None:
-                    continue
-                d = _hashlib.sha1(str(v).encode("utf-8")).digest()
-                h1 = int.from_bytes(d[:8], "little")
-                h2 = int.from_bytes(d[8:16], "little") | 1
-                for i in range(5):
-                    idx = (h1 + i * h2) % m
-                    arr[idx >> 3] |= 1 << (idx & 7)
-            blooms[c] = {
-                "m": m,
-                "k": 5,
-                "b64": _b64.b64encode(_zlib.compress(bytes(arr))).decode("ascii"),
-            }
-        stats = {}
-        if _cols:
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for c in _cols:
-                i = idx.get(c)
-                if i is None:
-                    continue
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    s = md.row_group(rg).column(i).statistics
-                    if s is None or not s.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-                if lo is not None:
-                    stats[c] = [lo, hi]
-        return p, (md.num_rows, stats, blooms)
-
-    return dict(sc.parallelize(paths, n_slices).map(_footer).collect())
+    cols, bcols = tuple(stats_cols), tuple(bloom_cols)
+    return dict(
+        sc.parallelize(paths, n_slices).map(lambda p: (p, _read_footer_stats(p, cols, bcols))).collect()
+    )
 
 
 def keep_latest(df: DataFrame, key_col: str, lsn_col: str) -> DataFrame:
@@ -616,15 +570,17 @@ class LakeTable:
     def write_data_files(
         self,
         df: DataFrame,
-        schema_id: int,
         spec: list[PartitionField],
-        target_partitions: int | None = None,
         split_expr: F.Column | None = None,
         stats_cols: tuple[str, ...] = (),
         bloom_cols: tuple[str, ...] = (),
         aligned: bool = False,
     ) -> list[dict]:
         """Write df as new immutable data files; return manifest entries.
+
+        The entries carry no schema id: ``commit`` stamps the id of the
+        schema it commits, so a file's id always names a schema its
+        snapshot holds.  ``df`` must already have that schema's shape.
 
         ``bloom_cols``: additionally build a manifest-carried bloom filter
         per file for these columns (see ``_build_bloom``), enabling
@@ -671,9 +627,7 @@ class LakeTable:
                 # reference's repartition-before-write
                 # (EtlConfiguration.scala:47,52).  aligned=True skips this:
                 # the caller's plan already clusters the partition tuple.
-                nparts = target_partitions or out.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions"
-                )
+                nparts = out.sparkSession.conf.get("spark.sql.shuffle.partitions")
                 out = out.repartition(int(nparts), *pnames)
             out.write.partitionBy(*pnames).mode("overwrite").parquet(batch_dir)
         else:
@@ -702,12 +656,7 @@ class LakeTable:
             if nrows == 0:
                 self.io.delete(absf)
                 continue
-            e = {
-                "path": rel,
-                "partition": pvals,
-                "schema_id": schema_id,
-                "rows": nrows,
-            }
+            e = {"path": rel, "partition": pvals, "rows": nrows}
             if col_stats:
                 e["stats"] = col_stats
             if col_blooms:
@@ -747,8 +696,14 @@ class LakeTable:
         - otherwise: append
         - new_spec: adopt a new partition spec (requires replace_all — old
           files' partition tuples are meaningless under the new spec)
+        - new_schema: the schema ``new_files`` were written under; a schema
+          that differs from the parent's gets the next id
         - properties: merged over the parent's and inherited by every child
         - summary: JSON record of this commit alone (not inherited)
+
+        Assigns and stamps schema ids: every entry of ``new_files`` is
+        tagged with the snapshot's schema id (the new id, else the
+        parent's), the only place a schema id is computed.
         """
         parent = self.current_snapshot()
         if expected_parent is not None and parent.snapshot_id != expected_parent:
@@ -772,6 +727,7 @@ class LakeTable:
         if new_schema is not None and new_schema != parent.schema:
             schema_id = max(schemas) + 1
             schemas[schema_id] = new_schema
+        new_files = [{**f, "schema_id": schema_id} for f in new_files]
 
         props = dict(parent.properties)
         props.update(properties or {})

@@ -1,7 +1,9 @@
 """Post-deploy QC runner — standalone invariant checks against live tables.
 
 Reference: the qc suite's helper API ``shouldBeEmpty`` / ``shouldNotContainNull``
-/ ``handleErrors`` and its one-invariant-per-app structure
+/ ``handleErrors`` (here ``should_not_contain_null``,
+``should_not_contain_duplicates`` and ``handle_errors``; ``shouldBeEmpty`` is
+the contract every check returns) and its one-invariant-per-app structure
 (etl/qc/TestingApp.scala:116-199; non-duplication:
 etl/qc/variantlist/NonDuplicationSNV.scala:10-16; exact frequency
 recomputation: etl/qc/frequency/RQDMTotal.scala:11-30).
@@ -32,11 +34,6 @@ class CheckResult:
     passed: bool
     n_offending: int
     examples: list[dict] = field(default_factory=list)
-
-
-def should_be_empty(df: DataFrame) -> DataFrame:
-    """Identity marker: the check's contract is 'this frame has no rows'."""
-    return df
 
 
 def should_not_contain_null(df: DataFrame, *cols: str) -> DataFrame:

@@ -37,10 +37,6 @@ def _dot_fold_sql(a: str, b: str, n: int = 64) -> str:
     )
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 

@@ -194,7 +194,7 @@ def test_bloom_cap_skips_large_files_and_warns(spark, tmp_path):
     df = spark.range(BLOOM_MAX_ROWS + 1).withColumnRenamed("id", "doc_id")
     with pytest.warns(UserWarning, match="BLOOM_MAX_ROWS"):
         files = t.write_data_files(
-            df.coalesce(1), 0, t.partition_spec, bloom_cols=("doc_id",)
+            df.coalesce(1), t.partition_spec, bloom_cols=("doc_id",)
         )
     assert files and all(not e.get("blooms") for e in files)
 

@@ -4,6 +4,9 @@ event batch) and executor-side parquet-stats collection above the threshold."""
 from __future__ import annotations
 
 import os
+import pickle
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -83,6 +86,36 @@ def test_stats_driver_and_executor_paths_agree(spark, tmp_path, monkeypatch):
         assert rows == 5
         assert stats["lsn"] == [i * 10, i * 10 + 4]
         assert blooms == {}
+
+
+def test_footer_reader_runs_without_the_package(tmp_path):
+    """The executor path ships ``_read_footer_stats`` by value: unpickled in
+    a fresh interpreter that cannot import this package, it returns what
+    the driver computes (row count, min/max and blooms)."""
+    from pyspark import cloudpickle
+
+    from clin_variant_etl_spark.lake.table import _read_footer_stats
+
+    p = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"lsn": [3, 9, 5], "doc_id": ["a", "b", None]}), p)
+    args = (p, ("lsn",), ("doc_id",))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = (
+        "import pickle, sys; fn, args = pickle.load(sys.stdin.buffer); "
+        "sys.stdout.buffer.write(pickle.dumps(fn(*args)))"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps((_read_footer_stats, args)),
+        capture_output=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=60,
+    )
+    assert run.returncode == 0, run.stderr.decode()
+    got = pickle.loads(run.stdout)
+    assert got == _read_footer_stats(*args)
+    assert got[0] == 3 and got[1] == {"lsn": [3, 9]} and set(got[2]) == {"doc_id"}
 
 
 def test_stats_missing_column_ok(spark, tmp_path):

@@ -25,7 +25,7 @@ def _mk(spark, path, partitioned=True):
     df = spark.createDataFrame(
         [("d1", 10, "web"), ("d2", 20, "books"), ("d3", 30, "code")], SCHEMA
     )
-    files = t.write_data_files(df, 0, spec)
+    files = t.write_data_files(df, spec)
     t.commit("append", files)
     return t
 
@@ -65,7 +65,7 @@ def test_time_travel(spark, tmp_path):
     t = _mk(spark, tmp_path / "t4")
     v2 = t.current_snapshot().snapshot_id
     df = spark.createDataFrame([("d9", 99, "wiki")], SCHEMA)
-    files = t.write_data_files(df, 0, t.partition_spec)
+    files = t.write_data_files(df, t.partition_spec)
     t.commit("append", files)
     assert t.read(spark).count() == 4
     assert t.read(spark, snapshot_id=v2).count() == 3
@@ -82,7 +82,7 @@ def test_schema_evolution_add_and_widen(spark, tmp_path):
         ]
     )
     df = spark.createDataFrame([("d4", 40, "web", "en")], new_schema)
-    files = t.write_data_files(df, 1, t.partition_spec)
+    files = t.write_data_files(df, t.partition_spec)
     t.commit("append", files, new_schema=new_schema)
     out = t.read(spark)
     assert dict(out.dtypes)["n_tok"] == "bigint"
@@ -101,7 +101,7 @@ def test_upsert_evolves_field_inside_array_of_struct(spark, tmp_path):
         [T.StructField("k", T.StringType(), False), T.StructField("items", item(*names), True)]
     )
     t = LakeTable.create(str(tmp_path / "t_nested"), schema("a"), [])
-    t.commit("append", t.write_data_files(spark.createDataFrame([("k1", [(1,)])], schema("a")), 0, []))
+    t.commit("append", t.write_data_files(spark.createDataFrame([("k1", [(1,)])], schema("a")), []))
     upsert(spark, t, spark.createDataFrame([("k2", [(2, 20)])], schema("a", "b")), keys=["k"])
     upsert(spark, t, spark.createDataFrame([("k3", [(3,)])], schema("a")), keys=["k"])
     got = {r["k"]: [tuple(i) for i in r["items"]] for r in t.read(spark).collect()}
@@ -125,7 +125,7 @@ def test_overwrite_and_overwrite_partitions(spark, tmp_path, spec, replaced):
     df = spark.createDataFrame(
         [("d1", 10, "web"), ("d2", 20, "books"), ("d3", 30, "code")], SCHEMA
     )
-    t.commit("append", t.write_data_files(df, 0, spec))
+    t.commit("append", t.write_data_files(df, spec))
     d2 = spark.createDataFrame([("d2b", 21, "books")], SCHEMA)
     overwrite_partitions(spark, t, d2)
     got = {r["doc_id"]: r["n_tok"] for r in t.read(spark).collect()}
@@ -163,7 +163,7 @@ def test_scd1_updated_on_only_bumps_on_change(spark, tmp_path):
     t1 = dt.datetime(2026, 1, 1)
     t2 = dt.datetime(2026, 2, 1)
     first = spark.createDataFrame([("a", 1, t1, t1), ("b", 2, t1, t1)], schema)
-    files = t.write_data_files(first, 0, [])
+    files = t.write_data_files(first, [])
     t.commit("append", files)
     # a unchanged, b changed
     src = spark.createDataFrame([("a", 1, t2, t2), ("b", 3, t2, t2)], schema)
@@ -178,7 +178,7 @@ def test_compact_and_expire(spark, tmp_path):
     t = _mk(spark, tmp_path / "t9")
     for i in range(3):
         df = spark.createDataFrame([(f"x{i}", i, "web")], SCHEMA)
-        t.commit("append", t.write_data_files(df, 0, t.partition_spec))
+        t.commit("append", t.write_data_files(df, t.partition_spec))
     before_files = len(t.current_snapshot().files)
     compact(spark, t)
     after_files = len(t.current_snapshot().files)
@@ -205,7 +205,7 @@ def test_manifest_shards_reused_across_commits(spark, tmp_path):
     # overwrite exactly one bucket
     b = sorted({m["partition"]["bucket"] for m in t.current_snapshot().manifests})[0]
     df = t.read(spark, partition_filter={"bucket": {b}})
-    files = t.write_data_files(df, 0, t.partition_spec)
+    files = t.write_data_files(df, t.partition_spec)
     t.commit("merge", files, replace_partitions=[{"bucket": b}])
     after = {m["path"]: m for m in t.current_snapshot().manifests}
     untouched_before = {p for p, m in before.items() if m["partition"]["bucket"] != b}

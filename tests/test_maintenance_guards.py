@@ -28,7 +28,7 @@ def _mk_table(spark, path, n_commits=3, rows_per=4):
         df = spark.createDataFrame(
             [(i * rows_per + j, f"v{i}-{j}") for j in range(rows_per)], SCHEMA
         )
-        files = t.write_data_files(df, 0, t.partition_spec)
+        files = t.write_data_files(df, t.partition_spec)
         t.commit("append", files)
     return t
 
@@ -40,7 +40,7 @@ def test_compact_conflicts_with_concurrent_commit(spark, tmp_path):
     # compaction pinned its snapshot — the compaction must conflict, not
     # silently drop the writer's shard via replace_partitions
     df = spark.createDataFrame([(100, "late")], SCHEMA)
-    t.commit("append", t.write_data_files(df, 0, t.partition_spec))
+    t.commit("append", t.write_data_files(df, t.partition_spec))
     with pytest.raises(CommitConflict):
         compact(spark, t, at_snapshot_id=pinned)
     # the concurrent row survived

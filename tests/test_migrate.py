@@ -44,7 +44,7 @@ ROWS = [
 def _mk(spark, path):
     t = LakeTable.create(str(path), SCHEMA, [])
     df = spark.createDataFrame(ROWS, SCHEMA)
-    t.commit("append", t.write_data_files(df, 0, []))
+    t.commit("append", t.write_data_files(df, []))
     return t
 
 
@@ -81,6 +81,22 @@ def test_drop_nested_field(spark, tmp_path):
     assert "meta" not in t.read(spark).columns
 
 
+def test_noop_migrations_keep_the_table_readable(spark, tmp_path):
+    """A rename onto the same name and a drop of an absent column leave the
+    schema as it was; the rewritten files must name a schema the snapshot
+    holds, so the table stays readable after each."""
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType(), False), T.StructField("source", T.StringType(), True)]
+    )
+    t = LakeTable.create(str(tmp_path / "noop"), schema, [])
+    t.commit("append", t.write_data_files(spark.createDataFrame([("d1", "web"), ("d2", "pdf")], schema), []))
+    want = {"d1": "web", "d2": "pdf"}
+    rename_column(spark, t, "source", "source")
+    assert {r["doc_id"]: r["source"] for r in t.read(spark).collect()} == want
+    drop_column(spark, t, "not_a_column")
+    assert {r["doc_id"]: r["source"] for r in t.read(spark).collect()} == want
+
+
 def test_update_partitioning_rewrite(spark, tmp_path):
     t = _mk(spark, tmp_path / "m4")
     new_spec = [PartitionField("bucket", "doc_id", "bucket_m3", 2)]
@@ -103,10 +119,10 @@ def test_update_partitioning_conflict_safety(spark, tmp_path):
     new_spec = [PartitionField("b", "doc_id", "bucket_m3", 4)]
     snap = t.current_snapshot()
     df = t.read(spark, snapshot_id=snap.snapshot_id)
-    files = t.write_data_files(df, snap.schema_id, new_spec)
+    files = t.write_data_files(df, new_spec)
     # concurrent writer lands first
     other = LT(t.path)
-    other.commit("append", other.write_data_files(df.limit(1), snap.schema_id, []))
+    other.commit("append", other.write_data_files(df.limit(1), []))
     with pytest.raises(CommitConflict):
         t.commit("update_partitioning", files, replace_all=True,
                  expected_parent=snap.snapshot_id, new_spec=new_spec)

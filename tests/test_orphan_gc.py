@@ -26,7 +26,7 @@ def _mk(spark, path):
     spec = [PartitionField("bucket", "doc_id", "bucket_m3", 4)]
     t = LakeTable.create(str(path), SCHEMA, spec)
     df = spark.createDataFrame([("d1", 10), ("d2", 20), ("d3", 30)], SCHEMA)
-    t.commit("append", t.write_data_files(df, 0, spec))
+    t.commit("append", t.write_data_files(df, spec))
     return t
 
 
@@ -41,7 +41,7 @@ def test_crashed_write_batch_is_swept(spark, tmp_path):
     before = t.read(spark).count()
     # simulate the crash: files written, commit never happens
     df = spark.createDataFrame([("zz", 99)], SCHEMA)
-    t.write_data_files(df, 0, t.partition_spec)
+    t.write_data_files(df, t.partition_spec)
     n_batches = len([d for d in t.io.list(t.data_dir) if d.startswith("b-")])
     assert n_batches == 2  # the committed batch + the orphaned one
 
@@ -57,7 +57,7 @@ def test_crashed_write_batch_is_swept(spark, tmp_path):
 def test_grace_window_protects_inflight_writes(spark, tmp_path):
     t = _mk(spark, tmp_path / "t2")
     df = spark.createDataFrame([("zz", 99)], SCHEMA)
-    files = t.write_data_files(df, 0, t.partition_spec)
+    files = t.write_data_files(df, t.partition_spec)
     # default posture (real now, 3-day grace): the just-written batch looks
     # exactly like an in-flight writer's and must survive
     assert remove_orphan_files(t) == []
@@ -70,7 +70,7 @@ def test_time_travel_files_are_not_orphans(spark, tmp_path):
     t = _mk(spark, tmp_path / "t3")
     v2 = t.current_snapshot().snapshot_id
     df = spark.createDataFrame([("d9", 99)], SCHEMA)
-    t.commit("append", t.write_data_files(df, 0, t.partition_spec))
+    t.commit("append", t.write_data_files(df, t.partition_spec))
     # files referenced ONLY by the older snapshot are still reachable
     assert remove_orphan_files(t, grace_seconds=0, now=_future()) == []
     assert t.read(spark, snapshot_id=v2).count() == 3
@@ -93,7 +93,7 @@ def test_orphan_manifest_shard_and_tmp_spill(spark, tmp_path):
 def test_dry_run_deletes_nothing(spark, tmp_path):
     t = _mk(spark, tmp_path / "t5")
     df = spark.createDataFrame([("zz", 99)], SCHEMA)
-    t.write_data_files(df, 0, t.partition_spec)
+    t.write_data_files(df, t.partition_spec)
     would = remove_orphan_files(t, grace_seconds=0, now=_future(), dry_run=True)
     assert would
     for rel in would:

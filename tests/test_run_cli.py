@@ -231,7 +231,7 @@ def test_identity_respec_keeps_the_cli_key(spark, cli_env, capsys):
     # a redelivered copy of every row gives each partition a second file, so
     # maintain's compaction selects (and folds) every partition
     snap = t.current_snapshot()
-    t.commit("append", t.write_data_files(t.read(spark), snap.schema_id, snap.partition_spec))
+    t.commit("append", t.write_data_files(t.read(spark), snap.partition_spec))
     pipe = CdcPipeline(spark, table, apply_mode="mor")
     before = {r["doc_id"]: r["n_tok"] for r in pipe.read_state().collect()}
     # more docs than source values: a fold keyed on source would lose rows

@@ -79,10 +79,10 @@ def test_publish_alias_swap_and_pinned_readers(spark, tmp_path):
     schema = T.StructType([T.StructField("doc_id", T.StringType()), T.StructField("v", T.IntegerType())])
     t = LakeTable.create(str(tmp_path / "pub"), schema, [])
     df1 = spark.createDataFrame([("d1", 1)], schema)
-    s1 = t.commit("append", t.write_data_files(df1, 0, []))
+    s1 = t.commit("append", t.write_data_files(df1, []))
     t.publish()  # points 'published' at s1
     df2 = spark.createDataFrame([("d2", 2)], schema)
-    t.commit("append", t.write_data_files(df2, 0, []))
+    t.commit("append", t.write_data_files(df2, []))
     # consumers on the alias still see the published snapshot...
     assert t.read(spark, ref="published").count() == 1
     # ...writers see head
@@ -105,7 +105,7 @@ def test_compact_per_partition_selection_and_binpack(spark, tmp_path):
     # 3 append commits -> up to 3 files per bucket
     for i in range(3):
         df = spark.createDataFrame([(f"d{j}", i) for j in range(8)], schema)
-        t.commit("append", t.write_data_files(df, 0, spec))
+        t.commit("append", t.write_data_files(df, spec))
     by_part = {}
     for f in t.current_snapshot().files:
         by_part.setdefault(f["partition"]["bucket"], []).append(f)
@@ -129,7 +129,7 @@ def test_compact_per_partition_selection_and_binpack(spark, tmp_path):
     # bin-packing: a tiny target forces >1 output file per rewritten bucket
     for i in range(2):
         df = spark.createDataFrame([(f"d{j}", i) for j in range(8)], schema)
-        t.commit("append", t.write_data_files(df, 0, spec))
+        t.commit("append", t.write_data_files(df, spec))
     compact(spark, t, min_input_files=2, target_file_bytes=700)
     packed = {}
     for f in t.current_snapshot().files:

@@ -24,7 +24,7 @@ CHECKS = {"no_dup_keys": lambda df: should_not_contain_duplicates(df, "k")}
 
 def _commit(spark, t, rows):
     df = spark.createDataFrame(rows, SCHEMA)
-    t.commit("append", t.write_data_files(df, 0, t.partition_spec))
+    t.commit("append", t.write_data_files(df, t.partition_spec))
 
 
 def test_failed_audit_keeps_readers_on_last_good_snapshot(spark, tmp_path):
