@@ -13,12 +13,12 @@ surveyed in SURVEY.md) as an idiomatic Spark lakehouse engine:
                   (reference: FhirRawToNormalizedMappings.scala:14-17 keep-newest
                   dedup; LoadResolver Upsert/Scd1 semantics).
 - ``streaming`` : Structured Streaming wrapper (readStream → foreachBatch apply).
-- ``operators`` : the generic operator surface from SURVEY.md §2 (joins, aggs,
+- ``queries``   : the registered operator surface from SURVEY.md §2 (joins, aggs,
                   window dedup, interval joins) plus training-data ops
                   (dedup families, similarity search, text analysis, multimodal).
 - ``sources``   : DatasetConf-driven readers (parquet/csv/json-with-pinned-schema,
                   multi-path union) (reference: fhir/FhirToNormalizedETL.scala:22-33).
-- ``plans``     : ordered named-transformation pipelines — the reference's logical
+- ``transforms``: ordered named-transformation pipelines — the reference's logical
                   IR (reference: utils/transformation/DatasetTransformationMapping.scala:5-17).
 """
 

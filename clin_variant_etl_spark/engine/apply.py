@@ -4,27 +4,32 @@ The pipeline per epoch (SURVEY.md §7.2 step 3-8):
 
   events ──▶ keep-max-LSN dedup per doc_id (engine/dedup.py auto)   [skew-proof]
          ──▶ bucket pruning (only buckets with changes are touched)  [merge ∝ delta]
-         ──▶ full-outer join vs the touched bucket slice, LSN guard  [late events]
-         ──▶ rewrite touched buckets + atomic snapshot commit        [exactly-once]
+         ──▶ join vs the touched buckets' resolved state, LSN guard  [late events]
+         ──▶ write + atomic snapshot commit                          [exactly-once]
              (the commit's summary is the epoch's lineage record)    [observability]
 
-Two apply modes (``CdcPipeline(apply_mode=…)``), identical semantics and
-lineage counts, different physical write:
+One LSN guard serves both apply modes (``CdcPipeline(apply_mode=…)``): an
+event wins only if its lsn beats the stored version of its key, read from
+the touched buckets at the epoch's snapshot and resolved to one row per key
+(``_read_resolved``).  The classify join, the action of each event, the
+output rows and the lineage counts are the same in both modes; they differ
+only in what they read of the prior state and in whether the commit
+replaces or appends:
 
-- ``"cow"`` (copy-on-write, the default): the full-outer merge above —
-  touched buckets are REWRITTEN each epoch.  Read path is a plain scan.
-  At a 100-TB table where a uniform-keyed 10^8-event epoch touches every
-  bucket, the whole table is rewritten per epoch (carry rows dominate) —
-  the reference shares this property (Delta CoW MERGE,
+- ``"cow"`` (copy-on-write, the default): reads the full prior rows, joins
+  full-outer and REPLACES the touched buckets each epoch.  Read path is a
+  plain scan.  At a 100-TB table where a uniform-keyed 10^8-event epoch
+  touches every bucket, the whole table is rewritten per epoch (carry rows
+  dominate) — the reference shares this property (Delta CoW MERGE,
   etl/conf/EtlConfiguration.scala:47,52), but it is the real 100× ceiling.
-- ``"mor"`` (merge-on-read): the per-epoch net change (≤1 row/key, already
-  computed by the dedup) is classified against a NARROW prior-state probe
-  (key + lsn + tombstone only — the token payload of the existing table is
-  never read, never shuffled, never rewritten) and committed as *delta
-  files* appended to the touched buckets.  Write cost ∝ epoch delta, not
-  table size.  Readers resolve base+delta with the same keep-max-LSN rule
-  (``read_state``), and ``lake.maintenance.compact(resolve_keep_latest=…)``
-  folds deltas back into base files out-of-band.
+- ``"mor"`` (merge-on-read): reads only key + lsn + tombstone of the prior
+  state (the token payload of the existing table is never read, never
+  shuffled, never rewritten), joins left, and APPENDS the winning rows — the
+  epoch's net change, ≤1 row/key — as *delta files* in the touched buckets.
+  Write cost ∝ epoch delta, not table size.  Readers resolve base+delta
+  with the same keep-max-LSN rule (``read_state``), and
+  ``lake.maintenance.compact(resolve_keep_latest=…)`` folds deltas back
+  into base files out-of-band.
 
 Exactly-once: the epoch gate (``last_epoch_id``) lives in the *data table's*
 snapshot properties, so gate-update and data-commit are one atomic operation —
@@ -174,7 +179,6 @@ class CdcPipeline:
         key_col: str = "doc_id",
         n_salts: int = 8,
         collect_part_stats: bool = False,
-        debug_checks: bool = False,
         apply_mode: str = "cow",
         broadcast_max_rows: int | None = 4_000_000,
         key_blooms: bool = False,
@@ -214,9 +218,6 @@ class CdcPipeline:
         # epoch writes (``table.added_files(sid, parent_id)``): per-file
         # lineage at the cost of a footer read per written file.
         self.collect_part_stats = collect_part_stats
-        # opt-in: assert the redelivery contract (same (key,lsn) ⇒ identical
-        # payload) per epoch — one extra job, for audit/debug runs only
-        self.debug_checks = debug_checks
         if lineage_path is not None or checkpoint_path is not None:
             warnings.warn(
                 "CdcPipeline: lineage_path/checkpoint_path are ignored; epoch "
@@ -357,7 +358,9 @@ class CdcPipeline:
         row_filter: F.Column | None = None,
     ) -> DataFrame:
         """One row per key INCLUDING internals (lsn, tombstones) — the mor
-        keep-max-LSN resolve applied when deltas may exist.  The resolve is
+        keep-max-LSN resolve applied when deltas may exist.  Serves the
+        readers and ``apply_epoch``'s prior-state read, so the merge guards
+        each event against its key's resolved version in both modes.  The resolve is
         ``lake.table.keep_latest``, a column-prunable top-1 window: a caller
         that selects a few columns scans and shuffles only those.  Unlike
         event dedup it needs no salting: a data file holds at most one row
@@ -602,7 +605,6 @@ class CdcPipeline:
             count_col="_fold_cnt",
             distinct_col="_dst_cnt",
             stats_df=events_observed,
-            check_payload_consistency=self.debug_checks,
             broadcast_max_rows=self.broadcast_max_rows,
             cleanup=dedup_cleanup,
             estimate=self._net_estimate,
@@ -624,6 +626,7 @@ class CdcPipeline:
         )
 
         spec = snap.partition_spec
+        mor = self.apply_mode == "mor"
         bucket_expr = spec[0].expr() if spec else F.lit("0")
         net = net.withColumn("_bucket_v", bucket_expr).persist()
         try:
@@ -718,124 +721,74 @@ class CdcPipeline:
                 for a in ("insert", "update", "delete", "dup", "stale")
             ]
 
-            if self.apply_mode == "mor":
-                # ---- merge-on-read: classify the net change against a
-                # NARROW prior-state probe and append only the winning rows
-                # as delta files.  The probe reads 3 columns (key, lsn,
-                # tombstone) of the touched buckets — column pruning keeps
-                # the token payload of the existing table out of the scan,
-                # the shuffle and the write entirely; only the epoch's own
-                # ≤1-row-per-key net change is ever written.  Resolution to
-                # visible state happens at read (read_state) and deltas are
-                # folded by maintenance.compact(resolve_keep_latest=…).
-                narrow = self.table.read(self.spark, partition_filter=pfilter).select(
-                    F.col(self.key_col), F.col(INTERNAL_LAST_LSN), F.col(INTERNAL_DELETED)
+            # ---- the LSN guard: an event wins only if its lsn beats the
+            # stored version of its key.  The prior state of the touched
+            # buckets is read at the epoch's snapshot, resolved to one row
+            # per key when deltas may exist.  cow reads it whole and joins
+            # full-outer, so the output is the touched buckets' new content
+            # (carry rows included).  mor reads only key, lsn and tombstone
+            # (the payload columns are typed null literals, so column
+            # pruning keeps the stored payload out of the scan and the
+            # shuffle), joins left and keeps only the winning rows.
+            # Classification stats are `observe`d on the SAME plan, so the
+            # write is the only action — no separate stats job.
+            target = align_frame(
+                self._read_resolved(snap.snapshot_id, partition_filter=pfilter), new_schema
+            )
+            if mor:
+                target = target.select(
+                    self.key_col,
+                    *[F.lit(None).cast(merged_payload[c].dataType).alias(c) for c in payload_cols],
+                    INTERNAL_LAST_LSN,
+                    INTERNAL_DELETED,
                 )
-                if aligned:
-                    # hash(key, k·n_buckets) satisfies the groupBy's
-                    # clustering requirement, so the resolve aggregation
-                    # reuses this exchange and its output stays
-                    # co-partitioned with net_j below — the classify join
-                    # adds NO exchange and the delta write is aligned.
-                    narrow = narrow.repartition(n_parts, self.key_col)
-                    net_j = net.repartition(n_parts, self.key_col)
-                else:
-                    net_j = net
-                # prior visible version per key: max-lsn row wins (numeric
-                # max_by — HashAggregate; ties are impossible because a
-                # delta is only appended when it strictly beats the prior)
-                prior = narrow.groupBy(self.key_col).agg(
-                    F.max(INTERNAL_LAST_LSN).alias("_p_lsn"),
-                    F.max_by(
-                        F.coalesce(F.col(INTERNAL_DELETED), F.lit(False)),
-                        F.col(INTERNAL_LAST_LSN),
-                    ).alias("_p_del"),
+            net_j = net
+            if aligned:
+                net_j = net.repartition(n_parts, self.key_col)
+                target = target.repartition(n_parts, self.key_col)
+            s, t = net_j.alias("s"), target.alias("t")
+            joined = s.join(
+                t,
+                F.col(f"s.{self.key_col}") == F.col(f"t.{self.key_col}"),
+                "left" if mor else "full_outer",
+            )
+            s_lsn = F.col("s.lsn")
+            t_lsn = F.col(f"t.{INTERNAL_LAST_LSN}")
+            t_deleted = F.coalesce(F.col(f"t.{INTERNAL_DELETED}"), F.lit(False))
+            is_delete = F.col("s.op") == "D"
+            t_absent = F.col(f"t.{self.key_col}").isNull() | t_deleted
+            is_event = s_lsn.isNotNull()
+            event_wins = is_event & (t_lsn.isNull() | (s_lsn > t_lsn))
+            action = (
+                F.when(~is_event, F.lit("carry"))
+                .when(~event_wins & (s_lsn == t_lsn), F.lit("dup"))
+                .when(~event_wins, F.lit("stale"))
+                .when(is_delete, F.lit("delete"))
+                .when(t_absent, F.lit("insert"))
+                .otherwise(F.lit("update"))
+            )
+            out_cols = [
+                F.coalesce(F.col(f"s.{self.key_col}"), F.col(f"t.{self.key_col}")).alias(
+                    self.key_col
                 )
-                joined = net_j.join(prior, self.key_col, "left")
-                s_lsn = F.col("lsn")
-                p_lsn = F.col("_p_lsn")
-                is_delete = F.col("op") == "D"
-                t_absent = p_lsn.isNull() | F.col("_p_del")
-                event_wins = p_lsn.isNull() | (s_lsn > p_lsn)
-                action = (
-                    F.when(~event_wins & (s_lsn == p_lsn), F.lit("dup"))
-                    .when(~event_wins, F.lit("stale"))
-                    .when(is_delete, F.lit("delete"))
-                    .when(t_absent, F.lit("insert"))
-                    .otherwise(F.lit("update"))
-                )
-                out_cols = [F.col(self.key_col)]
-                for c in payload_cols:
-                    out_cols.append(
-                        F.when(is_delete, F.lit(None).cast(merged_payload[c].dataType))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-                out_cols.append(s_lsn.alias(INTERNAL_LAST_LSN))
-                out_cols.append(is_delete.alias(INTERNAL_DELETED))
-                merged = (
-                    joined.select(*out_cols, action.alias("_action"))
-                    .observe(obs_cls, *counters)
-                    .where(~F.col("_action").isin("dup", "stale"))
-                    .drop("_action")
-                )
-            else:
-                # ---- copy-on-write: LSN-guarded resolve (full outer join on
-                # the key) + rewrite of the touched buckets.  Classification
-                # stats are `observe`d on the SAME plan, so the merge write
-                # is the only action — no separate stats job.
-                target = self.table.read(self.spark, partition_filter=pfilter)
-                target = align_frame(target, new_schema)
-                if aligned:
-                    net_j = net.repartition(n_parts, self.key_col)
-                    target = target.repartition(n_parts, self.key_col)
-                else:
-                    net_j = net
-                s, t = net_j.alias("s"), target.alias("t")
-                joined = s.join(
-                    t, F.col(f"s.{self.key_col}") == F.col(f"t.{self.key_col}"), "full_outer"
-                )
-                s_lsn = F.col("s.lsn")
-                t_lsn = F.col(f"t.{INTERNAL_LAST_LSN}")
-                is_delete = F.col("s.op") == "D"
-                t_absent = F.col(f"t.{self.key_col}").isNull() | F.coalesce(
-                    F.col(f"t.{INTERNAL_DELETED}"), F.lit(False)
-                )
-                is_event = s_lsn.isNotNull()
-                event_wins = is_event & (t_lsn.isNull() | (s_lsn > t_lsn))
-                action = (
-                    F.when(~is_event, F.lit("carry"))
-                    .when(~event_wins & (s_lsn == t_lsn), F.lit("dup"))
-                    .when(~event_wins, F.lit("stale"))
-                    .when(is_delete, F.lit("delete"))
-                    .when(t_absent, F.lit("insert"))
-                    .otherwise(F.lit("update"))
-                )
-                out_cols = [
-                    F.coalesce(F.col(f"s.{self.key_col}"), F.col(f"t.{self.key_col}")).alias(
-                        self.key_col
-                    )
-                ]
-                for c in payload_cols:
-                    out_cols.append(
-                        F.when(event_wins & is_delete, F.lit(None).cast(merged_payload[c].dataType))
-                        .when(event_wins, F.col(f"s.{c}"))
-                        .otherwise(F.col(f"t.{c}"))
-                        .alias(c)
-                    )
+            ]
+            for c in payload_cols:
                 out_cols.append(
-                    F.when(event_wins, s_lsn).otherwise(t_lsn).alias(INTERNAL_LAST_LSN)
+                    F.when(event_wins & is_delete, F.lit(None).cast(merged_payload[c].dataType))
+                    .when(event_wins, F.col(f"s.{c}"))
+                    .otherwise(F.col(f"t.{c}"))
+                    .alias(c)
                 )
-                out_cols.append(
-                    F.when(event_wins, is_delete)
-                    .otherwise(F.coalesce(F.col(f"t.{INTERNAL_DELETED}"), F.lit(False)))
-                    .alias(INTERNAL_DELETED)
-                )
-                merged = joined.select(*out_cols, action.alias("_action"))
-                merged = merged.observe(obs_cls, *counters).drop("_action")
+            out_cols.append(F.when(event_wins, s_lsn).otherwise(t_lsn).alias(INTERNAL_LAST_LSN))
+            out_cols.append(
+                F.when(event_wins, is_delete).otherwise(t_deleted).alias(INTERNAL_DELETED)
+            )
+            merged = joined.select(*out_cols, action.alias("_action")).observe(obs_cls, *counters)
+            if mor:
+                merged = merged.where(F.col("_action").isin("insert", "update", "delete"))
 
             files = self.table.write_data_files(
-                merged,
+                merged.drop("_action"),
                 spec,
                 # per-file lsn coverage from footers — rides the write the
                 # merge does anyway (executor-side above the file threshold)
@@ -843,7 +796,7 @@ class CdcPipeline:
                 bloom_cols=((self.key_col,) if self.key_blooms else ()) + self.bloom_cols,
                 aligned=aligned,
             )
-            if self.apply_mode == "mor":
+            if mor:
                 for e in files:
                     e["delta"] = True  # observability: delta vs base files
             cls = obs_cls.get
@@ -864,33 +817,26 @@ class CdcPipeline:
                 h.unpersist()
 
         record["wall_ms"] = int((time.monotonic() - t0) * 1000)
-        if self.apply_mode == "mor":
+        if mor:
             # stamp the snapshot so ANY reader (not just this pipeline
             # object) knows the table may hold unresolved deltas
             props["mor"] = "1"
         try:
-            if self.apply_mode == "mor":
-                # append-only: base and earlier delta files stay by
-                # reference — commit work ∝ changed buckets' NEW shards only
-                new_snap = self.table.commit(
-                    "mor-append",
-                    files,
-                    new_schema=new_schema if evolved else None,
-                    properties=props,
-                    expected_parent=snap.snapshot_id,
-                    summary=record,
-                )
-            else:
-                new_snap = self.table.commit(
-                    "merge",
-                    files,
-                    replace_partitions=[{BUCKET_PARTITION: b} for b in affected] if spec else None,
-                    replace_all=not spec,
-                    new_schema=new_schema if evolved else None,
-                    properties=props,
-                    expected_parent=snap.snapshot_id,
-                    summary=record,
-                )
+            # cow replaces the touched buckets (the whole table when there
+            # is no spec); mor appends, keeping base and earlier delta files
+            # by reference — commit work ∝ the changed buckets' new shards
+            new_snap = self.table.commit(
+                "mor-append" if mor else "merge",
+                files,
+                replace_partitions=(
+                    [{BUCKET_PARTITION: b} for b in affected] if spec and not mor else None
+                ),
+                replace_all=not (spec or mor),
+                new_schema=new_schema if evolved else None,
+                properties=props,
+                expected_parent=snap.snapshot_id,
+                summary=record,
+            )
         except CommitConflict:
             # someone else moved the table; if they committed our epoch the
             # replay rule applies, otherwise surface the conflict

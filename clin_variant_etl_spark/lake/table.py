@@ -176,6 +176,18 @@ def _read_footer_stats(
 BLOOM_MAX_ROWS = (1 << 19) // 10
 
 
+def _bloom_positions(value, m: int, k: int) -> list[int]:
+    """The k bit positions of ``str(value)`` in an m-bit bloom, shared by
+    the build and the probe: double hashing (Kirsch-Mitzenmacher) over a
+    sha1 digest."""
+    import hashlib as _hashlib
+
+    d = _hashlib.sha1(str(value).encode("utf-8")).digest()
+    h1 = int.from_bytes(d[:8], "little")
+    h2 = int.from_bytes(d[8:16], "little") | 1
+    return [(h1 + i * h2) % m for i in range(k)]
+
+
 def _build_bloom(
     values, bits_per_row: int = 10, k: int = 5, max_bits: int = 1 << 19
 ) -> dict | None:
@@ -193,7 +205,6 @@ def _build_bloom(
     min/max).
     """
     import base64 as _b64
-    import hashlib as _hashlib
     import zlib as _zlib
 
     n = len(values)
@@ -204,11 +215,7 @@ def _build_bloom(
     for v in values:
         if v is None:
             continue  # null never matches an equality probe
-        d = _hashlib.sha1(str(v).encode("utf-8")).digest()
-        h1 = int.from_bytes(d[:8], "little")
-        h2 = int.from_bytes(d[8:16], "little") | 1
-        for i in range(k):
-            idx = (h1 + i * h2) % m
+        for idx in _bloom_positions(v, m, k):
             arr[idx >> 3] |= 1 << (idx & 7)
     return {
         "m": m,
@@ -225,18 +232,9 @@ def _bloom_bits(bloom: dict) -> bytes:
 
 
 def _bits_may_contain(arr: bytes, m: int, k: int, value) -> bool:
-    import hashlib as _hashlib
-
     if value is None:
         return True  # conservative: equality-on-null is the caller's problem
-    d = _hashlib.sha1(str(value).encode("utf-8")).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:16], "little") | 1
-    for i in range(k):
-        idx = (h1 + i * h2) % m
-        if not (arr[idx >> 3] >> (idx & 7)) & 1:
-            return False
-    return True
+    return all((arr[idx >> 3] >> (idx & 7)) & 1 for idx in _bloom_positions(value, m, k))
 
 
 def _bloom_may_contain(bloom: dict, value) -> bool:
@@ -424,6 +422,7 @@ class LakeTable:
             manifests=[],
             properties=properties or {},
             root=path,
+            io=t.io,
         )
         t._write_snapshot(snap)
         return t
@@ -743,6 +742,7 @@ class LakeTable:
             properties=props,
             summary=dict(summary or {}),
             root=self.path,
+            io=self.io,
         )
         self._write_snapshot(snap)
         return snap
@@ -754,7 +754,7 @@ class LakeTable:
         O(changed buckets), not O(table files)."""
         if not files:
             return []
-        os.makedirs(self.manifest_dir, exist_ok=True)
+        self.io.makedirs(self.manifest_dir)
         groups: dict[tuple, list[dict]] = {}
         for f in files:
             groups.setdefault(tuple(sorted(f["partition"].items())), []).append(f)

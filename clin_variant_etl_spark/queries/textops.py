@@ -375,7 +375,7 @@ GROUP BY doc_id
 # md5 is a pure function of the word → a process-wide cache is safe and,
 # on a zipfian corpus, collapses per-token hashing to per-UNIQUE-token
 # hashing within each executor.  Bounded so an adversarial vocabulary can't
-# grow it past ~64 MB.
+# grow it past ~64 MB: on overflow the oldest half is evicted.
 _MD5_CACHE: dict[str, int] = {}
 _MD5_CACHE_MAX = 1 << 20
 
@@ -411,7 +411,10 @@ def _simhash_batches(batches):
                 counts[j] = len(ws)
                 words.extend(ws)
         if len(cache) > _MD5_CACHE_MAX:
-            cache.clear()
+            # evict the oldest half (dicts keep insertion order), so the
+            # next batch does not re-hash its whole vocabulary
+            for w in list(cache)[: len(cache) // 2]:
+                del cache[w]
         H = np.empty(len(words), dtype=np.int64)
         for k, w in enumerate(words):
             h = cache.get(w)

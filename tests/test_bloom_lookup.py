@@ -53,8 +53,9 @@ def test_blooms_may_match_conservative():
 
 
 def test_driver_and_executor_bloom_paths_agree(spark, tmp_path, monkeypatch):
-    """The executor closure inlines the bloom build (cloudpickle by-value
-    convention) — pin it bit-for-bit equal to the canonical _build_bloom."""
+    """Above the file threshold the footers are read on executors by the
+    same ``_read_footer_stats`` (pickled by value) — pin its blooms
+    bit-for-bit equal to the driver path's."""
     paths = []
     for i in range(6):
         p = str(tmp_path / f"f{i}.parquet")

@@ -1,10 +1,12 @@
-"""Unit tests: LSH bucket-size cap (fan-out bound + observe metrics) and the
-words-cache session-lifecycle hygiene (stale/stopped sessions never served)."""
+"""Unit tests: LSH bucket-size cap (fan-out bound + observe metrics), the
+words-cache session-lifecycle hygiene (stale/stopped sessions never served)
+and the md5-cache eviction."""
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import Observation
 
 from clin_variant_etl_spark.queries import textops
@@ -88,3 +90,12 @@ def test_cap_buckets_fused_null_keys_match_semi_join(spark):
         (r["bucket"], r["m"]) for r in cap_buckets_fused(df, ["bucket"], cap=9).collect()
     )
     assert a == b == [("a", 1), ("a", 4)]
+
+
+def test_md5_cache_overflow_keeps_newest_half(monkeypatch):
+    """An overflowing md5 cache drops its oldest half, not everything."""
+    cache = {f"w{i}": i for i in range(10)}
+    monkeypatch.setattr(textops, "_MD5_CACHE", cache)
+    monkeypatch.setattr(textops, "_MD5_CACHE_MAX", 4)
+    list(textops._simhash_batches([pd.DataFrame({"doc_id": [1], "text": ["hello"]})]))
+    assert list(cache) == [f"w{i}" for i in range(5, 10)] + ["hello"]

@@ -11,12 +11,14 @@ from __future__ import annotations
 import threading
 
 import pytest
+from pyspark.sql import types as T
 
 from clin_variant_etl_spark.lake.fsio import (
     CommitConflict,
     LocalFileIO,
     MemoryFileIO,
 )
+from clin_variant_etl_spark.lake.table import _SHARD_CACHE, LakeTable
 
 
 @pytest.fixture(params=["local", "memory"])
@@ -120,3 +122,18 @@ def test_mtime_contract(io_root):
     assert io.mtime(f"{root}/a.json") >= t0 - 1.0
     with pytest.raises(FileNotFoundError):
         io.mtime(f"{root}/missing.json")
+
+
+def test_memory_table_commit_leaves_local_disk_untouched(tmp_path):
+    """Every metadata write of a commit goes through the table's FileIO: a
+    MemoryFileIO table rooted under a real directory creates nothing there."""
+    root = str(tmp_path / "t")
+    io = MemoryFileIO()
+    schema = T.StructType([T.StructField("k", T.StringType())])
+    table = LakeTable.create(root, schema, io=io)
+    entry = {"path": "data/b0/f0.parquet", "partition": {}, "rows": 1, "bytes": 10}
+    table.commit("append", [entry])
+    assert list(tmp_path.iterdir()) == []
+    _SHARD_CACHE.clear()  # the snapshot must list the entry from the FileIO
+    files = LakeTable(root, io=io).current_snapshot().files
+    assert [f["path"] for f in files] == [entry["path"]]

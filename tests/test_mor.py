@@ -13,7 +13,10 @@ mor-specific properties:
    without changing visible state, including a mid-stream selective fold;
 4. schema evolution works through the delta path (old base rows resolve
    against new-schema delta rows);
-5. time travel: read_state(snapshot_id) resolves at that snapshot.
+5. time travel: read_state(snapshot_id) resolves at that snapshot;
+6. both modes guard an event against its key's RESOLVED stored version: a
+   cow epoch over mor deltas, and a stored row with a null lsn, classify
+   the same way in either mode.
 """
 
 from __future__ import annotations
@@ -26,7 +29,9 @@ from pyspark.sql import functions as F
 
 from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
 from clin_variant_etl_spark.engine.oracle import canonical_rows, replay_oracle
+from clin_variant_etl_spark.lake import load
 from clin_variant_etl_spark.lake.maintenance import compact
+from clin_variant_etl_spark.qc import run_cdc_qc
 from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA, INTERNAL_LAST_LSN
 from clin_variant_etl_spark.testgen import (
     EventGenConfig,
@@ -35,6 +40,7 @@ from clin_variant_etl_spark.testgen import (
 )
 
 N_EPOCHS = 5
+EVENT_SCHEMA = "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
 
 
 @pytest.fixture(scope="module")
@@ -169,3 +175,56 @@ def test_mor_time_travel_and_exactly_once(spark, tmp_path, event_dir):
     # time travel resolves at the pinned snapshot
     for sid, want in zip(snaps, states):
         assert canonical_rows(pipe.read_state(snapshot_id=sid).toPandas()) == want
+
+
+def test_cow_epoch_over_mor_deltas(spark, tmp_path):
+    """A cow epoch on a table holding mor deltas joins each event to its
+    key's resolved version only: a@5 against base a@1 and delta a@10 is
+    one stale event, not an update and a stale."""
+    path = str(tmp_path / "t")
+    create_cdc_table(path, BASE_DOCS_SCHEMA, n_buckets=4)
+    mor = CdcPipeline(spark, path, apply_mode="mor")
+    mor.apply_epoch(
+        spark.createDataFrame(
+            [(1, "I", "a", [1], 1, "web"), (2, "I", "b", [2], 1, "web")], EVENT_SCHEMA
+        ),
+        0,
+    )
+    mor.apply_epoch(spark.createDataFrame([(10, "U", "a", [10], 1, "web")], EVENT_SCHEMA), 1)
+    cow = CdcPipeline(spark, path, apply_mode="cow")
+    res = cow.apply_epoch(
+        spark.createDataFrame(
+            [(5, "U", "a", [5], 1, "web"), (20, "U", "b", [20], 1, "web")], EVENT_SCHEMA
+        ),
+        2,
+    )
+    applied = res.applied_inserts + res.applied_updates + res.applied_deletes
+    assert applied + res.dropped_duplicates + res.dropped_stale == 2
+    assert (res.applied_updates, res.dropped_stale) == (1, 1)
+    run_cdc_qc(spark, cow)
+    raw = cow.table.read(spark)
+    assert raw.groupBy("doc_id").count().where(F.col("count") > 1).count() == 0
+    got = {r["doc_id"]: (r["tokens"], r[INTERNAL_LAST_LSN]) for r in raw.collect()}
+    assert got == {"a": ([10], 10), "b": ([20], 20)}
+
+
+@pytest.mark.parametrize("apply_mode", ["cow", "mor"])
+def test_null_lsn_row_is_an_update_in_both_modes(spark, tmp_path, apply_mode):
+    """Rows loaded without internal columns carry a null ``_last_lsn``; an
+    event on such a key replaces a live row, so it is an update in both
+    modes."""
+    path = str(tmp_path / "t")
+    create_cdc_table(path, BASE_DOCS_SCHEMA, n_buckets=4)
+    pipe = CdcPipeline(spark, path, apply_mode=apply_mode)
+    load.overwrite(
+        spark,
+        pipe.table,
+        spark.createDataFrame(
+            [("a", [1], 1, "web"), ("b", [2], 1, "web")],
+            "doc_id string, tokens array<int>, n_tok int, source string",
+        ),
+    )
+    res = pipe.apply_epoch(spark.createDataFrame([(7, "U", "a", [7], 1, "web")], EVENT_SCHEMA), 0)
+    assert (res.applied_updates, res.applied_inserts) == (1, 0)
+    got = {r["doc_id"]: r["tokens"] for r in pipe.read_state().collect()}
+    assert got == {"a": [7], "b": [2]}
