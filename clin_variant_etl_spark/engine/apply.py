@@ -1,11 +1,16 @@
 """CDC apply: LSN-guarded MERGE of change-event micro-batches into the lake.
 
-The pipeline per epoch (SURVEY.md §7.2 step 3-8):
+The pipeline per epoch (SURVEY.md §7.2 step 3-8) makes exactly TWO Spark
+actions when the epoch has events, one when it is empty:
 
-  events ──▶ keep-max-LSN dedup per doc_id (engine/dedup.py auto)   [skew-proof]
-         ──▶ bucket pruning (only buckets with changes are touched)  [merge ∝ delta]
+  events ──▶ probe: slim (key, max lsn) winners grouped by bucket    [action 1]
+         │     └─▶ histogram: winner count (payload plan), touched
+         │         buckets + keys per bucket (aligned n_parts),
+         │         Σ distinct (key, lsn) (lineage), observed source stats
+         ──▶ payload: the winning events (engine/dedup.py), hash-    [skew-proof]
+             partitioned on the key into n_parts, shuffled once
          ──▶ join vs the touched buckets' resolved state, LSN guard  [late events]
-         ──▶ write + atomic snapshot commit                          [exactly-once]
+         ──▶ write (action 2) + atomic snapshot commit               [exactly-once]
              (the commit's summary is the epoch's lineage record)    [observability]
 
 One LSN guard serves both apply modes (``CdcPipeline(apply_mode=…)``): an
@@ -57,7 +62,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from ..lake.table import CommitConflict, LakeTable, PartitionField, keep_latest
+from ..lake.table import (
+    LOOKUP_BY_MAX_CANDIDATES,
+    CommitConflict,
+    LakeTable,
+    PartitionField,
+    keep_latest,
+    local_frame,
+)
 from ..schemas import INTERNAL_DELETED, INTERNAL_LAST_LSN, align_frame, merge_schemas, same_shape
 from .dedup import latest_by_key_auto
 
@@ -113,8 +125,9 @@ def _aligned_partition_count(
       ≡ bucket (mod n_buckets) — exactly k of them — so a HOT bucket
       (adversarial keys concentrating in one bucket) would pin its entire
       merge+write to k tasks no matter how many cores idle.  The per-bucket
-      net-key histogram is already collected for the commit, so size k such
-      that the hottest bucket's share spreads to ~1/parallelism per task:
+      net-key histogram comes free with the dedup probe (the epoch's first
+      action groups the winners by bucket), so size k such that the
+      hottest bucket's share spreads to ~1/parallelism per task:
       k >= parallelism * max_bucket_share, capped at parallelism (beyond
       that every bucket already spans all cores).  The guard only arms when
       the hottest bucket exceeds 1.5x its uniform share, so ordinary
@@ -193,12 +206,12 @@ class CdcPipeline:
         if apply_mode not in ("cow", "mor"):
             raise ValueError(f"unknown apply_mode {apply_mode!r}")
         self.apply_mode = apply_mode
-        # dedup (engine/dedup.py latest_by_key_auto): measured winner-count
-        # cost model — broadcast join while the winner set fits
-        # ``broadcast_max_rows`` (payload never shuffles), salted
-        # single-pass once it cannot; the previous epoch's net count
-        # short-circuits the probe.  Both plans share the exact
-        # lineage-count contract.
+        # dedup (engine/dedup.py latest_by_key_auto): every epoch's probe
+        # measures its winner count — broadcast join while the winner set
+        # fits ``broadcast_max_rows`` (payload never shuffles before the
+        # merge's own partitioning), salted single-pass once it cannot or
+        # when it is None (never broadcast).  The lineage counts come from
+        # the probe, so both plans share them exactly.
         self.broadcast_max_rows = broadcast_max_rows
         # key_blooms: stamp a per-file bloom of key_col into every commit's
         # manifest entries, enabling lookup()'s file skipping.  Opt-in: the
@@ -209,9 +222,6 @@ class CdcPipeline:
         # lookup_by()'s secondary-column file skipping.  Same cost model as
         # key_blooms (one narrow re-read per written file per column).
         self.bloom_cols = tuple(bloom_cols)
-        # auto-variant probe short-circuit: last applied epoch's net-change
-        # count (in-process; a restarted driver simply re-probes once)
-        self._net_estimate: int | None = None
         # The epoch's source offset range + count always ride the `observe`
         # on the dedup pass — ZERO extra scans.  True also stamps per-file
         # ``_last_lsn`` [min, max] footer stats into the manifest entries the
@@ -249,9 +259,10 @@ class CdcPipeline:
 
         Layered pruning, each exact-or-conservative:
         1. bucket pruning — the sought keys' buckets are computed with the
-           table spec's OWN expression (one collect over len(keys) rows, so
-           the Python side can never disagree with the writer's murmur3);
-           only those buckets' manifest shards are even opened;
+           table spec's OWN expression, so the Python side can never
+           disagree with the writer's murmur3, over a JVM-local relation of
+           the keys (``local_frame``: the collect runs no Spark job); only
+           those buckets' manifest shards are even opened;
         2. bloom file skipping inside the bucket (``read(key_filter=…)``,
            populated when the pipeline runs with ``key_blooms=True``) — on a
            mor table a hot bucket holds base + many delta files, and the
@@ -286,9 +297,10 @@ class CdcPipeline:
         pf = None
         spec = snap.partition_spec
         if spec and spec[0].source_col == self.key_col and spec[0].transform == "bucket_m3":
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in keys],
+            kdf = local_frame(
+                self.spark,
                 T.StructType([T.StructField(self.key_col, field.dataType)]),
+                [(k,) for k in keys],
             )
             buckets = {r["b"] for r in kdf.select(spec[0].expr().alias("b")).collect()}
             pf = {spec[0].name: buckets}
@@ -320,10 +332,11 @@ class CdcPipeline:
            exactly the keys whose LATEST version matches.
 
         The candidate key set is collected to the driver — this is a POINT
-        lookup API (same contract as ``lookup``): values that select large
-        row fractions should use ``read_state().where(...)`` instead.
-        Without blooms on ``col`` the result is identical, just unpruned
-        (conservative read contract).
+        lookup API (same contract as ``lookup``): pass 1 collects at most
+        ``LOOKUP_BY_MAX_CANDIDATES + 1`` keys and raises past the cap;
+        values that select that many keys should use
+        ``read_state().where(...)`` instead.  Without blooms on ``col`` the
+        result is identical, just unpruned (conservative read contract).
         """
         values = list(values)
         # both passes read ONE snapshot: a commit landing between them must
@@ -345,7 +358,13 @@ class CdcPipeline:
             .select(self.key_col)
             .distinct()
         )
-        keys = [r[0] for r in cand.collect()]
+        keys = [r[0] for r in cand.limit(LOOKUP_BY_MAX_CANDIDATES + 1).collect()]
+        if len(keys) > LOOKUP_BY_MAX_CANDIDATES:
+            raise ValueError(
+                f"lookup_by: {col!r} in {values[:5]} matches more than "
+                f"{LOOKUP_BY_MAX_CANDIDATES} keys; this is a scan, not a point "
+                f"lookup: use read_state().where(F.col({col!r}).isin(...))"
+            )
         if not keys:
             return self.read_state(sid).limit(0)
         return self.lookup(keys, snapshot_id=sid).where(F.col(col).isin(values))
@@ -356,6 +375,7 @@ class CdcPipeline:
         partition_filter: dict[str, set[str]] | None = None,
         key_filter: dict[str, list] | None = None,
         row_filter: F.Column | None = None,
+        n_parts: int | None = None,
     ) -> DataFrame:
         """One row per key INCLUDING internals (lsn, tombstones) — the mor
         keep-max-LSN resolve applied when deltas may exist.  Serves the
@@ -368,7 +388,10 @@ class CdcPipeline:
         cannot occur: a delta row is appended only when its lsn strictly
         beats the key's prior version.  Filters
         are applied BEFORE the resolve; callers must only pass filters that
-        keep every version of any key they keep (key-level predicates)."""
+        keep every version of any key they keep (key-level predicates).
+        ``n_parts`` (the aligned merge's prior-state read): hash-partition on
+        the key into that many partitions BEFORE the resolve, so the window
+        and the merge join reuse that one exchange."""
         snap = self.table.snapshot_at(snapshot_id)
         df = self.table.read(
             self.spark,
@@ -378,6 +401,8 @@ class CdcPipeline:
         )
         if row_filter is not None:
             df = df.where(row_filter)
+        if n_parts:
+            df = df.repartition(n_parts, self.key_col)
         if self.apply_mode == "mor" or snap.properties.get("mor") == "1":
             df = keep_latest(df, self.key_col, INTERNAL_LAST_LSN)
         return df
@@ -559,6 +584,16 @@ class CdcPipeline:
             # replay of an already-committed epoch → exactly-once no-op:
             # no Spark job, no commit
             return ApplyResult(epoch_id, snap.snapshot_id, 0, 0, 0, 0, 0, 0, 0, skipped=True)
+        spec = snap.partition_spec
+        if spec and (len(spec), spec[0].name, spec[0].source_col) != (1, BUCKET_PARTITION, self.key_col):
+            # the merge reads and replaces the buckets its keys hash to; under
+            # any other spec it would miss the stored versions of its keys
+            raise ValueError(
+                f"apply_epoch: the table must be unpartitioned or partitioned by "
+                f"one {BUCKET_PARTITION!r} field on the key {self.key_col!r}, "
+                f"not {[p.to_json() for p in spec]}"
+            )
+        mor = self.apply_mode == "mor"
 
         # ---- schema evolution: merge incoming payload schema into the table's
         internal = {INTERNAL_LAST_LSN, INTERNAL_DELETED}
@@ -580,14 +615,10 @@ class CdcPipeline:
         payload_cols = [f.name for f in merged_payload.fields if f.name != self.key_col]
 
         # ---- lineage: global offsets/count always come FREE from an
-        # `observe` on the events scan inside the dedup job; per-file lsn
+        # `observe` on the events scan inside the dedup probe; per-file lsn
         # coverage (`collect_part_stats`) comes from the parquet footers of
         # the files the merge writes anyway — NO extra scan of the event
         # batch in either mode.  Both land in the epoch's own commit.
-
-        # ---- net change per key: keep-max-LSN dedup (auto plan choice).
-        # net is ≤1 row/key — small vs the event volume — so it is cached and
-        # reused by the stats pass and the merge write (one dedup execution).
         obs_ev = Observation(f"events-{epoch_id}")
         events_observed = events.observe(
             obs_ev,
@@ -595,56 +626,26 @@ class CdcPipeline:
             F.max("lsn").alias("max_lsn"),
             F.count(F.lit(1)).alias("n"),
         )
-        dedup_cleanup: list = []
-        variant_report: dict = {}
-        net = latest_by_key_auto(
+
+        # ---- the dedup probe (action 1): the keep-max-LSN winners per key,
+        # grouped by bucket — the winner count picks the payload plan, the
+        # histogram names the touched buckets and sizes the aligned merge,
+        # and Σ distinct (key, lsn) feeds the lineage arithmetic
+        probe = latest_by_key_auto(
             events,
             self.key_col,
             "lsn",
+            bucket_expr=spec[0].expr() if spec else None,
             n_salts=self.n_salts,
-            count_col="_fold_cnt",
-            distinct_col="_dst_cnt",
             stats_df=events_observed,
             broadcast_max_rows=self.broadcast_max_rows,
-            cleanup=dedup_cleanup,
-            estimate=self._net_estimate,
-            chosen=variant_report,
         )
-        # nested-aware alignment (missing nested fields → typed nulls) so an
-        # epoch can add a field INSIDE an array<struct> column mid-stream
-        net = align_frame(
-            net,
-            T.StructType(
-                merged_payload.fields
-                + [
-                    T.StructField("lsn", T.LongType()),
-                    T.StructField("op", T.StringType()),
-                    T.StructField("_fold_cnt", T.LongType()),
-                    T.StructField("_dst_cnt", T.LongType()),
-                ]
-            ),
-        )
-
-        spec = snap.partition_spec
-        mor = self.apply_mode == "mor"
-        bucket_expr = spec[0].expr() if spec else F.lit("0")
-        net = net.withColumn("_bucket_v", bucket_expr).persist()
         try:
-            # one aggregation delivers affected buckets AND the dedup totals
-            bucket_rows = (
-                net.groupBy("_bucket_v")
-                .agg(
-                    F.count(F.lit(1)).alias("n_keys"),
-                    F.sum("_fold_cnt").alias("sum_cnt"),
-                    F.sum("_dst_cnt").alias("sum_dst"),
-                )
-                .collect()
-            )
             _mark("dedup")
-            affected = [r["_bucket_v"] for r in bucket_rows]
-            net_count = sum(r["n_keys"] for r in bucket_rows)
-            total_dst = sum(r["sum_dst"] for r in bucket_rows)
-            # global source stats observed for free during the dedup job.
+            affected = list(probe.buckets)
+            net_count = probe.n_winners
+            total_dst = probe.n_pairs
+            # global source stats observed for free during the probe.
             # An EMPTY micro-batch (foreachBatch can deliver one) optimizes
             # to a local relation whose CollectMetrics never materializes —
             # Observation.get then fails JVM-side.  Only that case is
@@ -683,7 +684,7 @@ class CdcPipeline:
                     "merge", [], properties=props, expected_parent=snap.snapshot_id,
                     summary=record,
                 )
-                return self._result(record, new_snap.snapshot_id, t0, phases, variant_report)
+                return self._result(record, new_snap.snapshot_id, t0, phases, probe.variant)
 
             pfilter = {BUCKET_PARTITION: set(affected)} if spec else None
 
@@ -700,20 +701,28 @@ class CdcPipeline:
             # task still holds exactly ONE bucket value (k files per bucket
             # per epoch, folded by compaction) while the merge join uses at
             # least cluster-parallelism tasks and keeps its own exchange.
-            aligned = (
-                len(spec) == 1
-                and spec[0].transform == "bucket_m3"
-                and spec[0].source_col == self.key_col
-            )
-            n_parts = 0
+            aligned = bool(spec) and spec[0].transform == "bucket_m3"
+            n_parts = None
             if aligned:
                 n_parts = _aligned_partition_count(
                     spec[0].n,
                     self.spark.sparkContext.defaultParallelism,
-                    [r["n_keys"] for r in bucket_rows],
+                    list(probe.buckets.values()),
                     net_count,
                     int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 )
+            # ---- the payload pass, built now that n_parts is known: already
+            # hash-partitioned on the key into n_parts, so the merge join
+            # reuses its exchange.  Nested-aware alignment (missing nested
+            # fields → typed nulls) lets an epoch add a field INSIDE an
+            # array<struct> column mid-stream.
+            net = align_frame(
+                probe.payload(n_parts),
+                T.StructType(
+                    merged_payload.fields
+                    + [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+                ),
+            )
 
             obs_cls = Observation(f"cls-{epoch_id}")
             counters = [
@@ -733,7 +742,8 @@ class CdcPipeline:
             # Classification stats are `observe`d on the SAME plan, so the
             # write is the only action — no separate stats job.
             target = align_frame(
-                self._read_resolved(snap.snapshot_id, partition_filter=pfilter), new_schema
+                self._read_resolved(snap.snapshot_id, partition_filter=pfilter, n_parts=n_parts),
+                new_schema,
             )
             if mor:
                 target = target.select(
@@ -742,11 +752,7 @@ class CdcPipeline:
                     INTERNAL_LAST_LSN,
                     INTERNAL_DELETED,
                 )
-            net_j = net
-            if aligned:
-                net_j = net.repartition(n_parts, self.key_col)
-                target = target.repartition(n_parts, self.key_col)
-            s, t = net_j.alias("s"), target.alias("t")
+            s, t = net.alias("s"), target.alias("t")
             joined = s.join(
                 t,
                 F.col(f"s.{self.key_col}") == F.col(f"t.{self.key_col}"),
@@ -812,9 +818,7 @@ class CdcPipeline:
             )
             _mark("write")
         finally:
-            net.unpersist()
-            for h in dedup_cleanup:
-                h.unpersist()
+            probe.unpersist()
 
         record["wall_ms"] = int((time.monotonic() - t0) * 1000)
         if mor:
@@ -845,18 +849,17 @@ class CdcPipeline:
             raise
 
         _mark("commit")
-        self._net_estimate = net_count
         return self._result(
-            record, new_snap.snapshot_id, t0, phases, variant_report, evolved_schema=evolved
+            record, new_snap.snapshot_id, t0, phases, probe.variant, evolved_schema=evolved
         )
 
     @staticmethod
-    def _result(record: dict, snapshot_id: int, t0: float, phases: dict, variant: dict, **kw) -> ApplyResult:
+    def _result(record: dict, snapshot_id: int, t0: float, phases: dict, variant: str, **kw) -> ApplyResult:
         """The caller's view of a committed epoch record; its ``wall_ms``
         also covers the commit."""
         counts = {k: v for k, v in record.items() if not k.startswith("source_")}
         counts["wall_ms"] = int((time.monotonic() - t0) * 1000)
         return ApplyResult(
             snapshot_id=snapshot_id, phase_ms=phases,
-            dedup_variant_used=variant.get("variant"), **counts, **kw,
+            dedup_variant_used=variant, **counts, **kw,
         )

@@ -5,26 +5,36 @@ etl/fhir/FhirRawToNormalizedMappings.scala:14-17) keeps the newest version of
 each resource id.  Our key is ``doc_id`` and the order column is ``lsn``.
 
 ``latest_by_key_auto`` is the engine's one dedup strategy (``CdcPipeline``
-always calls it).  Per epoch it picks one of two order-insensitive,
-deterministic plans (SURVEY.md §7.4 rules out the reference's order-unstable
-orderBy+dropDuplicates E5 pattern) from the MEASURED winner count:
+always calls it).  Its one Spark action is the PROBE: the slim numeric winner
+aggregate (``_winner_frame``: key, winning lsn, distinct-lsn count — the one
+countDistinct pre-aggregates on (key, lsn), so a hot key's rows spread over
+its distinct lsns) is persisted and grouped by the caller's bucket
+expression in a single ``collect``.  That histogram is everything the apply
+needs before it writes: the winner count that picks the payload plan, the
+affected buckets and their key counts, Σ distinct (key, lsn) for the lineage
+arithmetic, and (via ``observe``) the source stats.
 
-- the join plan (``_winner_frame`` + ``_winner_join_tail``) — the winner
-  lsn per key is found with NUMERIC-only aggregates (HashAggregate; the one
-  countDistinct pre-aggregates on (key, lsn), so a hot key's rows spread
-  over its distinct lsns), and the payload rides ONE equi-join on
-  (key, lsn).  ``max_by(struct(payload…))`` instead would fall back to
-  SortAggregate and sort the whole batch.  While the measured winner set
-  fits ``broadcast_max_rows`` it is broadcast and the payload never
-  shuffles (map-side hash probe, skew-immune); with the probe disabled
-  (``None``) it is a (key, lsn)-spread shuffle join;
+The payload pass is built afterwards (``WinnerProbe.payload``), once the
+caller knows its partition count, and runs inside the caller's write — one
+of two order-insensitive, deterministic plans (SURVEY.md §7.4 rules out the
+reference's order-unstable orderBy+dropDuplicates E5 pattern):
+
+- the broadcast join — while the measured winner set fits
+  ``broadcast_max_rows``, the payload rides ONE map-side equi-join on
+  (key, lsn) against the broadcast winners (skew-immune, no shuffle of the
+  events), then ``dropDuplicates([key])`` drops exact redeliveries of the
+  winner.  ``max_by(struct(payload…))`` instead would fall back to
+  SortAggregate and sort the whole batch;
 - ``latest_by_key_salted`` — two-phase max_by: pre-reduce per (key, salt)
   so a hot key's rows are first reduced in S parallel tasks, then the S
   survivors reduce per key.  One pass over the payload, skew-proof.  Event
   dedup needs the salt (a hot key may repeat many times in one batch);
   table reads do not, and resolve with ``lake.table.keep_latest``.
 
-See ``latest_by_key_auto``'s docstring for the cost model.
+Either plan hash-partitions on the key into the caller's ``n_parts`` BEFORE
+its per-key reduction, so a bucket-aligned merge join reuses that exchange:
+the payload shuffles once per epoch.  See ``latest_by_key_auto``'s docstring
+for the cost model.
 """
 
 from __future__ import annotations
@@ -37,38 +47,26 @@ def latest_by_key_salted(
     key: str,
     order_col: str,
     n_salts: int = 8,
-    count_col: str | None = None,
-    distinct_col: str | None = None,
+    n_parts: int | None = None,
 ) -> DataFrame:
-    """Two-phase skew-proof keep-max-(order_col) per key.
+    """Two-phase skew-proof keep-max-(order_col) per key: one row per key
+    with the winning row's columns.
 
-    Returns one row per key with the winning row's columns.  Optional lineage
-    outputs: ``count_col`` = input rows folded into the key (incl. exact
-    duplicates), ``distinct_col`` = distinct ``order_col`` values folded
-    (so duplicates = count - distinct, superseded = distinct - 1).
-
-    Salting on ``order_col`` keeps the distinct-count exact: equal order
-    values always land in the same salt group, so per-salt distinct counts
-    sum to the per-key distinct count.
+    Salting on ``order_col`` keeps equal order values (exact redeliveries)
+    in the same salt group.  ``n_parts``: hash-partition the per-(key, salt)
+    survivors on the key into that many partitions before the per-key
+    reduction, so a consumer partitioned the same way (the aligned merge
+    join) needs no exchange of its own.
     """
     payload = [c for c in df.columns if c != key]
     salted = df.withColumn("_salt", F.pmod(F.hash(F.col(order_col)), F.lit(n_salts)))
     phase1 = salted.groupBy(key, "_salt").agg(
-        F.max_by(F.struct(*payload), F.col(order_col)).alias("_w"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct(order_col).alias("_dst"),
+        F.max_by(F.struct(*payload), F.col(order_col)).alias("_w")
     )
-    phase2 = phase1.groupBy(key).agg(
-        F.max_by(F.col("_w"), F.col(f"_w.{order_col}")).alias("_w"),
-        F.sum("_cnt").alias("_cnt"),
-        F.sum("_dst").alias("_dst"),
-    )
-    cols = [F.col(key)] + [F.col(f"_w.{c}").alias(c) for c in payload]
-    if count_col:
-        cols.append(F.col("_cnt").alias(count_col))
-    if distinct_col:
-        cols.append(F.col("_dst").alias(distinct_col))
-    return phase2.select(*cols)
+    if n_parts:
+        phase1 = phase1.repartition(n_parts, key)
+    phase2 = phase1.groupBy(key).agg(F.max_by(F.col("_w"), F.col(f"_w.{order_col}")).alias("_w"))
+    return phase2.select(F.col(key), *[F.col(f"_w.{c}").alias(c) for c in payload])
 
 
 def assert_payload_consistency(df: DataFrame, key: str, order_col: str) -> None:
@@ -94,41 +92,52 @@ def assert_payload_consistency(df: DataFrame, key: str, order_col: str) -> None:
         )
 
 
-def _winner_frame(df: DataFrame, key: str, order_col: str, stats_df: DataFrame | None):
-    """Slim numeric winner aggregate: (key, winning order value, fold count,
-    distinct count) — 4 narrow columns, HashAggregate all the way.
-    ``stats_df``: optionally a different (e.g. ``observe``-instrumented)
-    frame for this branch, so attached observations fire exactly once even
-    though the input appears twice in the join plan."""
-    src = stats_df if stats_df is not None else df
-    w = src.groupBy(key).agg(
-        F.max(order_col).alias("_win"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct(order_col).alias("_dst"),
+def _winner_frame(src: DataFrame, key: str, order_col: str) -> DataFrame:
+    """Slim numeric winner aggregate: (key, winning order value, distinct
+    order values folded) — HashAggregate all the way."""
+    return src.groupBy(key).agg(
+        F.max(order_col).alias(order_col), F.countDistinct(order_col).alias("_dst")
     )
-    return w.select(F.col(key), F.col("_win").alias(order_col), "_cnt", "_dst")
 
 
-def _winner_join_tail(
-    df: DataFrame,
-    win,
-    key: str,
-    order_col: str,
-    count_col: str | None,
-    distinct_col: str | None,
-) -> DataFrame:
-    """Payload of each key's winning (key, lsn).  Exact duplicates of the
-    winner survive the join; ``dropDuplicates([key])`` is deterministic in
-    content because same (key, lsn) implies an identical payload."""
-    out = df.join(win, [key, order_col]).dropDuplicates([key])
-    keep = [c for c in df.columns]
-    if count_col:
-        out = out.withColumn(count_col, F.col("_cnt"))
-        keep.append(count_col)
-    if distinct_col:
-        out = out.withColumn(distinct_col, F.col("_dst"))
-        keep.append(distinct_col)
-    return out.select(*keep)
+class WinnerProbe:
+    """What ``latest_by_key_auto``'s one action measured, and the builder of
+    the payload pass it chose.
+
+    - ``buckets``: bucket value → winner (net key) count;
+    - ``n_winners``: keys in the batch (one winner each);
+    - ``n_pairs``: Σ distinct (key, lsn) — events minus this are exact
+      redeliveries, this minus ``n_winners`` are superseded in-batch;
+    - ``variant``: ``"join"`` (broadcast winners) or ``"salted"``.
+
+    The winner frame stays persisted until ``unpersist()``; call it after
+    the payload's consumer has run.
+    """
+
+    def __init__(self, df, win, key, order_col, n_salts, variant, buckets, n_pairs):
+        self._df, self._win = df, win
+        self._key, self._order, self._n_salts = key, order_col, n_salts
+        self.variant = variant
+        self.buckets = buckets
+        self.n_winners = sum(buckets.values())
+        self.n_pairs = n_pairs
+
+    def payload(self, n_parts: int | None = None) -> DataFrame:
+        """One row per key: the winning event, with ``df``'s columns.
+        ``n_parts``: hash-partition on the key into that many partitions
+        before the per-key reduction (see ``latest_by_key_salted``)."""
+        df, key = self._df, self._key
+        if self.variant == "salted":
+            return latest_by_key_salted(df, key, self._order, self._n_salts, n_parts=n_parts)
+        out = df.join(F.broadcast(self._win.select(key, self._order)), [key, self._order])
+        if n_parts:
+            out = out.repartition(n_parts, key)
+        # exact redeliveries of the winner survive the join; same (key, lsn)
+        # implies an identical payload, so the pick is deterministic
+        return out.dropDuplicates([key]).select(*df.columns)
+
+    def unpersist(self) -> None:
+        self._win.unpersist()
 
 
 def latest_by_key_auto(
@@ -136,81 +145,50 @@ def latest_by_key_auto(
     key: str,
     order_col: str,
     *,
+    bucket_expr=None,
     n_salts: int = 8,
-    count_col: str | None = None,
-    distinct_col: str | None = None,
     stats_df: DataFrame | None = None,
     check_payload_consistency: bool = False,
     broadcast_max_rows: int | None = 4_000_000,
-    cleanup: list | None = None,
-    estimate: int | None = None,
-    chosen: dict | None = None,
-) -> DataFrame:
-    """Cost-model selection between the join and salted variants.
+) -> WinnerProbe:
+    """Run the dedup probe (ONE Spark action) and pick the payload plan.
 
-    The join variant's advantage is structural ONLY while the winner set
-    fits a broadcast: then the payload never shuffles at all (map-side hash
-    probe in source partitioning).  Once winners exceed the broadcast
-    threshold the join plan degrades to TWO passes over the event batch
-    (slim aggregate branch + payload join branch) plus a shuffle of a huge
-    winner frame — while the salted two-phase ``max_by`` does ONE pass and
-    ONE shuffle.  So the policy pivots on the measured winner count, not on
-    configuration:
+    The probe is needed anyway — it is the caller's bucket histogram — so
+    the plan choice costs nothing extra and follows THIS batch's measured
+    winner count:
 
-    1. ``estimate`` (the previous epoch's net-change count, free from
-       lineage) > 2× threshold → go salted immediately, skipping the probe
-       aggregate entirely (hysteresis factor 2 absorbs epoch-to-epoch
-       drift; a shrinking stream re-probes once the estimate halves).
-    2. otherwise run the slim winner aggregate and COUNT it (the same probe
-       the join variant needs for its broadcast decision anyway):
-       winners ≤ threshold → broadcast join (payload unshuffled),
-       winners > threshold → salted single-pass over the payload (the probe
-       cost is one numeric HashAggregate — pennies next to the payload pass
-       it avoids repeating).
+    - winners ≤ ``broadcast_max_rows`` → broadcast join: the payload is
+      read once more and never shuffles before the caller's own partitioning;
+    - winners > ``broadcast_max_rows`` (or ``None``: never broadcast) →
+      salted single pass over the payload; a broadcast of that many winners
+      would not fit, and a shuffle join would shuffle the events AND a huge
+      winner frame.
 
-    ``broadcast_max_rows=None`` disables the probe: always the shuffle
-    join.  ``cleanup``: the persisted winner frame is appended here so the
-    caller can unpersist it after the downstream consumer has materialized.
-    ``chosen`` (optional dict) reports ``variant`` ("join" | "salted"),
-    ``probed`` and ``n_winners`` for observability/tests.
+    ``bucket_expr``: the histogram's grouping expression, a function of
+    the key (the winner frame holds key and ``order_col``); ``None`` = one
+    bucket.  ``stats_df``: the same rows as ``df``, optionally
+    ``observe``-instrumented: the probe aggregates it, so attached
+    observations fire exactly once, on the probe; the payload pass reads
+    ``df``.
     """
-    report = chosen if chosen is not None else {}
     if check_payload_consistency:
         assert_payload_consistency(df, key, order_col)
-    if (
-        estimate is not None
-        and broadcast_max_rows is not None
-        and estimate > 2 * broadcast_max_rows
-    ):
-        # history says winners cannot fit a broadcast: single payload pass,
-        # stats ride the salted aggregation (no probe job at all)
-        report.update({"variant": "salted", "probed": False, "n_winners": None})
-        return latest_by_key_salted(
-            stats_df if stats_df is not None else df,
-            key,
-            order_col,
-            n_salts,
-            count_col=count_col,
-            distinct_col=distinct_col,
+    src = stats_df if stats_df is not None else df
+    win = _winner_frame(src, key, order_col).persist()
+    b = bucket_expr if bucket_expr is not None else F.lit("0")
+    try:
+        rows = (
+            win.groupBy(b.alias("_b"))
+            .agg(F.count(F.lit(1)).alias("_n"), F.sum("_dst").alias("_d"))
+            .collect()
         )
-    if broadcast_max_rows is None:
-        # probe disabled: (key, lsn)-spread shuffle join
-        report.update({"variant": "join", "probed": False, "n_winners": None})
-        win = _winner_frame(df, key, order_col, stats_df)
-        return _winner_join_tail(df, win, key, order_col, count_col, distinct_col)
-    win = _winner_frame(df, key, order_col, stats_df).persist()
-    if cleanup is not None:
-        cleanup.append(win)
-    n_winners = win.count()
-    if n_winners <= broadcast_max_rows:
-        report.update({"variant": "join", "probed": True, "n_winners": n_winners})
-        return _winner_join_tail(
-            df, F.broadcast(win), key, order_col, count_col, distinct_col
-        )
-    # winners won't fit a broadcast — salted single pass over the payload.
-    # The probe job already fired any observation attached to ``stats_df``,
-    # so the salted pass runs over the raw frame (metrics are not re-billed).
-    report.update({"variant": "salted", "probed": True, "n_winners": n_winners})
-    return latest_by_key_salted(
-        df, key, order_col, n_salts, count_col=count_col, distinct_col=distinct_col
+    except BaseException:
+        win.unpersist()
+        raise
+    buckets = {r["_b"]: r["_n"] for r in rows}
+    n_winners = sum(buckets.values())
+    fits = broadcast_max_rows is not None and n_winners <= broadcast_max_rows
+    return WinnerProbe(
+        df, win, key, order_col, n_salts,
+        "join" if fits else "salted", buckets, sum(r["_d"] for r in rows),
     )

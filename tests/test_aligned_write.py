@@ -261,3 +261,85 @@ def test_skew_guard_spreads_hot_bucket_end_to_end(spark):
             assert per_bucket["0"] == k, (mode, ep, per_bucket)
             assert max(per_bucket.values()) <= k, (mode, ep, per_bucket)
         assert_state_equals(pipe.read_state(), replay_oracle(events))
+
+
+def _node_col(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Line ``i`` of a plan tree string and every line beneath it."""
+    col = _node_col(lines[i])
+    end = next((j for j in range(i + 1, len(lines)) if _node_col(lines[j]) <= col), len(lines))
+    return lines[i:end]
+
+
+def _children(lines: list[str]) -> list[list[str]]:
+    """The subtrees of the root of ``lines``."""
+    first = _node_col(lines[1])
+    return [_subtree(lines, j) for j in range(1, len(lines)) if _node_col(lines[j]) == first]
+
+
+def test_mor_epoch_shuffles_each_join_side_once(spark, monkeypatch):
+    """At 16 buckets / 8 shuffle partitions (the aligned merge then runs at
+    16 partitions, not the session's 8), a mor epoch's write plan shuffles
+    each side of the merge join once: the prior-state probe is hash-
+    partitioned into the aligned count BEFORE the keep-max-LSN window,
+    which reuses that exchange, and the payload is partitioned the same way
+    before its per-key ``dropDuplicates``, which with the merge join reuses
+    it too.  (The event-side dedup probe is cached; it ran as the epoch's
+    first action.)"""
+    from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
+    from clin_variant_etl_spark.engine.oracle import assert_state_equals, replay_oracle
+    from clin_variant_etl_spark.lake.table import LakeTable
+    from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
+    from clin_variant_etl_spark.testgen import (
+        EventGenConfig,
+        generate_change_events,
+        write_events_by_epoch,
+    )
+
+    root = tempfile.mkdtemp(prefix="aligned_mor_")
+    cfg = EventGenConfig(n_docs=300, n_events=3000, n_epochs=2, seed=7)
+    tbl = generate_change_events(cfg)
+    write_events_by_epoch(tbl, os.path.join(root, "events"), 1)
+    tpath = os.path.join(root, "table")
+    create_cdc_table(tpath, BASE_DOCS_SCHEMA, n_buckets=16)
+    pipe = CdcPipeline(spark, tpath, n_salts=2, apply_mode="mor")
+
+    plans: list[str] = []
+    real = LakeTable.write_data_files
+
+    def spy(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(self, df, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        for ep in range(cfg.n_epochs):
+            pipe.apply_epoch(spark.read.parquet(os.path.join(root, "events", f"epoch={ep}")), ep)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert_state_equals(pipe.read_state(), replay_oracle(tbl.to_pandas()))
+
+    # epoch 1 is the first with a prior state to resolve
+    lines = plans[1].splitlines()
+    data = os.path.join(tpath, "data")
+    merge = next(
+        i for i, ln in enumerate(lines)
+        if "Join" in ln and any(data in x for x in _subtree(lines, i))
+    )
+    sides = _children(_subtree(lines, merge))
+    prior = next(s for s in sides if any(data in x for x in s))
+    payload = next(s for s in sides if s is not prior)
+    cached = next(i for i, ln in enumerate(payload) if "InMemoryRelation" in ln)
+    payload = [x for x in payload if x not in _subtree(payload, cached)]
+
+    def shuffles(side):
+        return [x.strip(" :+-") for x in side if "Exchange hashpartitioning" in x]
+
+    assert len(shuffles(prior)) == 1, shuffles(prior)
+    assert "hashpartitioning(doc_id" in shuffles(prior)[0] and ", 16)" in shuffles(prior)[0]
+    assert len(shuffles(payload)) == 1, shuffles(payload)

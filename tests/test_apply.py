@@ -177,10 +177,11 @@ def test_lineage_invariants(spark, tmp_path, pipeline):
 
 
 def test_dedup_variants_equivalent(spark):
-    """Every plan ``latest_by_key_auto`` can pick — broadcast join, shuffle
-    join and salted — and the salted variant called directly must produce
-    identical winners AND identical lineage counts (incl. exact-duplicate
-    redeliveries)."""
+    """Every plan ``latest_by_key_auto`` can pick — broadcast join and
+    salted, each with and without the aligned pre-partitioning — and the
+    salted variant called directly must produce identical winners, and the
+    probe the same lineage counts (incl. exact-duplicate redeliveries)
+    whichever plan it picks."""
     from clin_variant_etl_spark.engine.dedup import latest_by_key_auto, latest_by_key_salted
 
     rows = [
@@ -197,21 +198,19 @@ def test_dedup_variants_equivalent(spark):
     )
 
     def winners(df):
-        return {r["doc_id"]: (r["lsn"], r["tokens"], r["_c"], r["_d"]) for r in df.collect()}
+        return {r["doc_id"]: (r["lsn"], r["tokens"]) for r in df.collect()}
 
-    want = {"a": (3, [3], 4, 3), "b": (5, [5], 2, 1), "c": (4, [4], 1, 1)}
-    assert winners(latest_by_key_salted(ev, "doc_id", "lsn", 4, count_col="_c", distinct_col="_d")) == want
-    # broadcast_max_rows picks the plan: 3 winners fit 10 (broadcast join),
-    # None skips the probe (shuffle join), 0 cannot hold them (salted)
-    cleanup: list = []
-    for max_rows, variant in ((10, "join"), (None, "join"), (0, "salted")):
-        chosen: dict = {}
-        got = latest_by_key_auto(
-            ev, "doc_id", "lsn", n_salts=4, count_col="_c", distinct_col="_d",
-            broadcast_max_rows=max_rows, cleanup=cleanup, chosen=chosen,
-        )
-        assert chosen["variant"] == variant and chosen["probed"] == (max_rows is not None)
-        assert winners(got) == want, max_rows
-    assert len(cleanup) == 2  # the probed winner frames, surfaced to the caller
-    for h in cleanup:
-        h.unpersist()
+    want = {"a": (3, [3]), "b": (5, [5]), "c": (4, [4])}
+    assert winners(latest_by_key_salted(ev, "doc_id", "lsn", 4)) == want
+    # broadcast_max_rows picks the plan: 3 winners fit 10 (broadcast join);
+    # 0 cannot hold them and None never broadcasts (salted).  The probe
+    # always runs: 3 winners, 5 distinct (key, lsn) pairs of 7 events
+    for max_rows, variant in ((10, "join"), (None, "salted"), (0, "salted")):
+        probe = latest_by_key_auto(ev, "doc_id", "lsn", n_salts=4, broadcast_max_rows=max_rows)
+        try:
+            assert probe.variant == variant
+            assert (probe.n_winners, probe.n_pairs) == (3, 5)
+            for n_parts in (None, 5):
+                assert winners(probe.payload(n_parts)) == want, (max_rows, n_parts)
+        finally:
+            probe.unpersist()

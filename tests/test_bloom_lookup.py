@@ -114,6 +114,27 @@ def test_lookup_opens_strictly_fewer_files(spark, bloom_pipe):
     assert all("doc_id" in (e.get("blooms") or {}) for e in snap.files)
 
 
+def test_lookup_plans_without_a_spark_job(spark, bloom_pipe, spark_work):
+    """Calling ``lookup()`` hashes the keys into buckets over a JVM-local
+    relation and prunes manifests and blooms on the driver: no Spark job
+    runs until the result is collected.  A key every bloom rules out reads
+    no file, and collecting its empty result runs no job either."""
+    key = bloom_pipe.read_state().first()["doc_id"]
+    with spark_work() as n:
+        looked = bloom_pipe.lookup([key])
+    assert n.jobs == 0
+    assert [r["doc_id"] for r in looked.collect()] == [key]
+
+    files = bloom_pipe.table.current_snapshot().files
+    absent = next(
+        k for k in (f"doc-absent-{i}" for i in range(1000))
+        if not any(_blooms_may_match(f, {"doc_id": [k]}) for f in files)
+    )
+    with spark_work() as n:
+        assert bloom_pipe.lookup([absent]).collect() == []
+    assert n.jobs == 0
+
+
 def test_compaction_preserves_blooms(spark, tmp_path):
     """A mor fold must not erase lookup()'s pruning: compact re-blooms the
     columns its input files carried blooms for."""
@@ -246,6 +267,27 @@ def test_lookup_by_matches_filtered_state_and_skips_files(spark, payload_bloom_p
     # unknown column errors loudly
     with pytest.raises(ValueError, match="not in table schema"):
         pipe.lookup_by("nope", [1])
+
+
+def test_lookup_by_caps_candidate_keys(spark, payload_bloom_pipe, monkeypatch):
+    """``lookup_by`` is a point lookup: past ``LOOKUP_BY_MAX_CANDIDATES``
+    candidate keys it raises, pointing at ``read_state().where(...)``,
+    instead of collecting an unbounded key set to the driver."""
+    from clin_variant_etl_spark.engine import apply as apply_mod
+
+    pipe = payload_bloom_pipe
+    raw = (
+        pipe.table.read(spark).where(F.col("n_tok").isNotNull())
+        .groupBy("n_tok").agg(F.countDistinct("doc_id").alias("n"))
+    )
+    top = raw.orderBy(F.desc("n"), "n_tok").first()
+    assert top["n"] >= 2
+    monkeypatch.setattr(apply_mod, "LOOKUP_BY_MAX_CANDIDATES", top["n"])
+    want = pipe.read_state().where(F.col("n_tok") == top["n_tok"]).count()
+    assert pipe.lookup_by("n_tok", [top["n_tok"]]).count() == want  # at the cap
+    monkeypatch.setattr(apply_mod, "LOOKUP_BY_MAX_CANDIDATES", top["n"] - 1)
+    with pytest.raises(ValueError, match=r"read_state\(\)\.where"):
+        pipe.lookup_by("n_tok", [top["n_tok"]])
 
 
 def test_lookup_by_version_history_exactness(spark, payload_bloom_pipe):

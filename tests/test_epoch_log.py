@@ -65,7 +65,7 @@ def test_crash_after_data_commit_keeps_the_epoch_record(spark, tmp_path, log, mo
 
 
 @pytest.mark.filterwarnings("ignore::DeprecationWarning")
-def test_one_commit_per_epoch_and_free_replay(spark, tmp_path, log, monkeypatch):
+def test_one_commit_per_epoch_and_free_replay(spark, tmp_path, log, monkeypatch, spark_work):
     """Even with the legacy side-table arguments an epoch makes exactly one
     commit, and a redelivered committed epoch makes none and runs no Spark
     job."""
@@ -86,16 +86,34 @@ def test_one_commit_per_epoch_and_free_replay(spark, tmp_path, log, monkeypatch)
         pipe.apply_epoch(epoch(spark, k), k)
     assert commits == [path, path]
 
-    redelivered = epoch(spark, 1)  # built outside the probed job group
-    sc = spark.sparkContext
-    sc.setJobGroup("replay-probe", "redelivered epoch")
-    try:
+    redelivered = epoch(spark, 1)  # built outside the counted block
+    with spark_work() as n:
         res = pipe.apply_epoch(redelivered, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert res.skipped
-    assert list(sc.statusTracker().getJobIdsForGroup("replay-probe")) == []
+    assert (n.jobs, n.executions) == (0, 0)
     assert commits == [path, path]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_two_spark_actions_per_epoch(spark, tmp_path, log, spark_work, mode):
+    """A non-empty epoch makes exactly two Spark actions — the dedup probe,
+    which also yields the bucket histogram and the source stats, and the
+    merge write — and an empty epoch only the probe."""
+    events, epoch = log
+    pipe = CdcPipeline(spark, _table(tmp_path), n_salts=2, apply_mode=mode)
+    pipe.apply_epoch(epoch(spark, 0), 0)
+    for k in (1, 2):
+        ev = epoch(spark, k)
+        with spark_work() as n:
+            res = pipe.apply_epoch(ev, k)
+        assert res.event_count == int((events.epoch_hint == k).sum())
+        assert n.executions == 2, (mode, k, n.executions)
+    empty = epoch(spark, 0).limit(0)
+    with spark_work() as n:
+        res = pipe.apply_epoch(empty, 3)
+    assert (res.event_count, pipe.last_epoch_id()) == (0, 3)
+    assert n.executions == 1
+    assert_state_equals(pipe.read_state(), replay_oracle(events))
 
 
 def test_resume_point_survives_compaction_and_expiry(spark, tmp_path, log):

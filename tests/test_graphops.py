@@ -98,7 +98,7 @@ def test_star_cc_isolated_nodes_and_self_loops(spark):
     assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4, 5: 5}
 
 
-def test_star_cc_folded_convergence_job_budget(spark):
+def test_star_cc_folded_convergence_job_budget(spark, spark_work):
     """The fixed-point test rides the round's own distinct: per alternation
     exactly 2 jobs run (the checkpoint materialization and the scalar scan
     of its blocks) — the r4 shape paid 3 (checkpoint + two exceptAll jobs,
@@ -110,26 +110,22 @@ def test_star_cc_folded_convergence_job_budget(spark):
     edges = spark.createDataFrame(chain, "src long, dst long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
 
-    group = "star-cc-budget"
-    sc = spark.sparkContext
     # AQE materializes each shuffle stage as its own job, so the job count
     # is a plan-shape artifact under it; pin the ACTION count with AQE off
     # (one job per action), which is what the folded test actually changes.
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup(group, "star cc job budget", interruptOnCancel=False)
     try:
-        stats: dict = {}
-        out = connected_components_star(edges, nodes, stats=stats)
-        labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+        with spark_work() as counted:
+            stats: dict = {}
+            out = connected_components_star(edges, nodes, stats=stats)
+            labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     finally:
-        sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     assert set(labels.values()) == {0} and len(labels) == n
     rounds = stats["rounds"]
     assert 1 <= rounds <= 12  # O(log n) promise for a 120-chain
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
     # 2 jobs/round + constant overhead (initial edge checkpoint, final
     # label collect); the r4 shape would need >= 3/round
-    assert len(jobs) <= 2 * rounds + 3, (len(jobs), rounds)
+    assert counted.jobs <= 2 * rounds + 3, (counted.jobs, rounds)

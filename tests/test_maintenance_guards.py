@@ -88,11 +88,13 @@ def test_payload_consistency_assertion(spark):
         [(1, 10, "a"), (1, 10, "a"), (1, 11, "b")], "k long, lsn long, p string"
     )
     assert_payload_consistency(good, "k", "lsn")  # no raise
-    out = latest_by_key_auto(good, "k", "lsn", check_payload_consistency=True).collect()
+    probe = latest_by_key_auto(good, "k", "lsn", check_payload_consistency=True)
+    out = probe.payload().collect()
+    probe.unpersist()
     assert [(r["k"], r["lsn"], r["p"]) for r in out] == [(1, 11, "b")]
 
     corrupt = spark.createDataFrame(
         [(1, 10, "a"), (1, 10, "DIFFERENT")], "k long, lsn long, p string"
     )
     with pytest.raises(ValueError, match="payload-consistency violation"):
-        latest_by_key_auto(corrupt, "k", "lsn", check_payload_consistency=True).collect()
+        latest_by_key_auto(corrupt, "k", "lsn", check_payload_consistency=True)

@@ -171,3 +171,26 @@ def test_align_expr_map_value_evolution(spark):
     rows = {r["k"]: r["m"] for r in out.collect()}
     assert rows["x"]["p"]["a"] == 1 and rows["x"]["p"]["b"] is None
     assert rows["y"] is None
+
+
+def test_apply_refuses_a_spec_off_the_key(spark, tmp_path):
+    """After ``update_partitioning`` onto a payload column the merge could
+    not find the stored versions of its keys (it reads and replaces the
+    buckets the keys hash to), so a later epoch would write a second live
+    row per key: ``apply_epoch`` refuses, and the table keeps its state."""
+    import pytest
+
+    from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
+    from clin_variant_etl_spark.schemas import BASE_DOCS_SCHEMA
+
+    ev_schema = "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
+    path = str(tmp_path / "respec")
+    create_cdc_table(path, BASE_DOCS_SCHEMA, n_buckets=4)
+    pipe = CdcPipeline(spark, path)
+    pipe.apply_epoch(spark.createDataFrame([(1, "I", "a", [1], 1, "w")], ev_schema), 0)
+    update_partitioning(spark, pipe.table, [PartitionField("source", "source")])
+    sid = pipe.table.current_snapshot().snapshot_id
+    with pytest.raises(ValueError, match="partitioned by one 'bucket' field on the key"):
+        pipe.apply_epoch(spark.createDataFrame([(2, "U", "a", [2], 2, "w")], ev_schema), 1)
+    assert pipe.table.current_snapshot().snapshot_id == sid
+    assert [(r["doc_id"], r["n_tok"]) for r in pipe.read_state().collect()] == [("a", 1)]
