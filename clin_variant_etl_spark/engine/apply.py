@@ -193,7 +193,7 @@ class CdcPipeline:
         n_salts: int = 8,
         collect_part_stats: bool = False,
         apply_mode: str = "cow",
-        broadcast_max_rows: int | None = 4_000_000,
+        broadcast_max_rows: int = 4_000_000,
         key_blooms: bool = False,
         bloom_cols: tuple[str, ...] = (),
     ):
@@ -209,9 +209,9 @@ class CdcPipeline:
         # dedup (engine/dedup.py latest_by_key_auto): every epoch's probe
         # measures its winner count — broadcast join while the winner set
         # fits ``broadcast_max_rows`` (payload never shuffles before the
-        # merge's own partitioning), salted single-pass once it cannot or
-        # when it is None (never broadcast).  The lineage counts come from
-        # the probe, so both plans share them exactly.
+        # merge's own partitioning), salted single-pass once it cannot.
+        # The lineage counts come from the probe, so both plans share them
+        # exactly.
         self.broadcast_max_rows = broadcast_max_rows
         # key_blooms: stamp a per-file bloom of key_col into every commit's
         # manifest entries, enabling lookup()'s file skipping.  Opt-in: the
@@ -613,6 +613,11 @@ class CdcPipeline:
             ]
         )
         payload_cols = [f.name for f in merged_payload.fields if f.name != self.key_col]
+        # bucket the key as the table stores it: murmur3 of int 7 and of
+        # bigint 7 differ, so a narrower event key would probe other buckets
+        events = events.withColumn(
+            self.key_col, F.col(self.key_col).cast(merged_payload[self.key_col].dataType)
+        )
 
         # ---- lineage: global offsets/count always come FREE from an
         # `observe` on the events scan inside the dedup probe; per-file lsn

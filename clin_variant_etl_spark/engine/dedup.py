@@ -114,12 +114,12 @@ class WinnerProbe:
     the payload's consumer has run.
     """
 
-    def __init__(self, df, win, key, order_col, n_salts, variant, buckets, n_pairs):
+    def __init__(self, df, win, key, order_col, n_salts, variant, buckets, n_winners, n_pairs):
         self._df, self._win = df, win
         self._key, self._order, self._n_salts = key, order_col, n_salts
         self.variant = variant
         self.buckets = buckets
-        self.n_winners = sum(buckets.values())
+        self.n_winners = n_winners
         self.n_pairs = n_pairs
 
     def payload(self, n_parts: int | None = None) -> DataFrame:
@@ -149,20 +149,21 @@ def latest_by_key_auto(
     n_salts: int = 8,
     stats_df: DataFrame | None = None,
     check_payload_consistency: bool = False,
-    broadcast_max_rows: int | None = 4_000_000,
+    broadcast_max_rows: int = 4_000_000,
 ) -> WinnerProbe:
     """Run the dedup probe (ONE Spark action) and pick the payload plan.
 
-    The probe is needed anyway — it is the caller's bucket histogram — so
-    the plan choice costs nothing extra and follows THIS batch's measured
-    winner count:
+    The probe always runs — it is the caller's bucket histogram — and the
+    plan follows THIS batch's measured winner count:
 
     - winners ≤ ``broadcast_max_rows`` → broadcast join: the payload is
       read once more and never shuffles before the caller's own partitioning;
-    - winners > ``broadcast_max_rows`` (or ``None``: never broadcast) →
-      salted single pass over the payload; a broadcast of that many winners
-      would not fit, and a shuffle join would shuffle the events AND a huge
-      winner frame.
+    - winners > ``broadcast_max_rows`` → salted single pass over the
+      payload; a broadcast of that many winners would not fit, and a
+      shuffle join would shuffle the events AND a huge winner frame.  This
+      path scans the events twice (probe, then payload), where a salted-only
+      pass would scan them once; it is the price of the histogram and has
+      not been measured at a winner count above the default threshold.
 
     ``bucket_expr``: the histogram's grouping expression, a function of
     the key (the winner frame holds key and ``order_col``); ``None`` = one
@@ -187,8 +188,8 @@ def latest_by_key_auto(
         raise
     buckets = {r["_b"]: r["_n"] for r in rows}
     n_winners = sum(buckets.values())
-    fits = broadcast_max_rows is not None and n_winners <= broadcast_max_rows
     return WinnerProbe(
         df, win, key, order_col, n_salts,
-        "join" if fits else "salted", buckets, sum(r["_d"] for r in rows),
+        "join" if n_winners <= broadcast_max_rows else "salted",
+        buckets, n_winners, sum(r["_d"] for r in rows),
     )

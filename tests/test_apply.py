@@ -8,7 +8,7 @@ Reference analogue of the assertions: exact recomputation + compare
 import numpy as np
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
 from clin_variant_etl_spark.engine.oracle import assert_state_equals, replay_oracle
@@ -176,6 +176,36 @@ def test_lineage_invariants(spark, tmp_path, pipeline):
         assert e["dropped_stale"] == r.dropped_stale
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_narrower_event_key_updates_stored_rows(spark, tmp_path, mode):
+    """Int-keyed events into a bigint-keyed table: the key keeps the table's
+    type, and murmur3 hashes an int and a bigint differently, so the epoch
+    must bucket its keys as the table stores them.  The updated keys land
+    in other buckets when hashed as int; each must still update its stored
+    row, and the state keep one row per key."""
+    payload = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
+    create_cdc_table(str(tmp_path / "t"), payload, key_col="id", n_buckets=8)
+    pipe = CdcPipeline(spark, str(tmp_path / "t"), key_col="id", apply_mode=mode)
+    keys, updated = range(40), [0, 1, 2]
+    old = [(k, "I", k, "old") for k in keys]
+    new = [(100 + k, "U", k, "new") for k in updated]
+    pipe.apply_epoch(spark.createDataFrame(old, "lsn long, op string, id long, v string"), 0)
+    ev = spark.createDataFrame(new, "lsn long, op string, id int, v string")
+
+    def bucket(c):  # the bucket_m3 formula
+        return F.pmod(F.hash(c), F.lit(8))
+
+    assert all(
+        r[0] != r[1] for r in ev.select(bucket("id"), bucket(F.col("id").cast("long"))).collect()
+    )
+    res = pipe.apply_epoch(ev, 1)
+    assert (res.applied_inserts, res.applied_updates) == (0, len(updated))
+    state = pipe.read_state()
+    assert dict(state.dtypes)["id"] == "bigint"
+    want = [(k, "new" if k in updated else "old") for k in keys]
+    assert sorted((r["id"], r["v"]) for r in state.collect()) == want
+
+
 def test_dedup_variants_equivalent(spark):
     """Every plan ``latest_by_key_auto`` can pick — broadcast join and
     salted, each with and without the aligned pre-partitioning — and the
@@ -203,9 +233,9 @@ def test_dedup_variants_equivalent(spark):
     want = {"a": (3, [3]), "b": (5, [5]), "c": (4, [4])}
     assert winners(latest_by_key_salted(ev, "doc_id", "lsn", 4)) == want
     # broadcast_max_rows picks the plan: 3 winners fit 10 (broadcast join);
-    # 0 cannot hold them and None never broadcasts (salted).  The probe
-    # always runs: 3 winners, 5 distinct (key, lsn) pairs of 7 events
-    for max_rows, variant in ((10, "join"), (None, "salted"), (0, "salted")):
+    # 0 cannot hold them (salted).  The probe always runs: 3 winners,
+    # 5 distinct (key, lsn) pairs of 7 events
+    for max_rows, variant in ((10, "join"), (0, "salted")):
         probe = latest_by_key_auto(ev, "doc_id", "lsn", n_salts=4, broadcast_max_rows=max_rows)
         try:
             assert probe.variant == variant

@@ -3,9 +3,8 @@
 The probe always runs — it is the apply's bucket histogram — and the
 payload plan follows THIS batch's measured winner count: broadcast join
 while the winner set fits ``broadcast_max_rows`` (payload never shuffles),
-salted single-pass once it cannot or when broadcasting is off (``None``).
-These tests pin the decision table AND that every branch returns identical
-winners + lineage counts.
+salted single-pass once it cannot.  These tests pin the decision table AND
+that every branch returns identical winners + lineage counts.
 """
 
 from pyspark.sql import functions as F
@@ -38,9 +37,9 @@ def _winners(df):
 
 def test_auto_decision_table_and_equivalence(spark):
     ev = _events(spark)
-    # (threshold, plan): 3 winners fit 10 and 3; they exceed 2 and 0; None
-    # never broadcasts.  The probe measures the same histogram every time.
-    for max_rows, variant in ((10, "join"), (3, "join"), (2, "salted"), (0, "salted"), (None, "salted")):
+    # (threshold, plan): 3 winners fit 10 and 3; they exceed 2 and 0.  The
+    # probe measures the same histogram every time.
+    for max_rows, variant in ((10, "join"), (3, "join"), (2, "salted"), (0, "salted")):
         probe = latest_by_key_auto(ev, "doc_id", "lsn", broadcast_max_rows=max_rows)
         try:
             assert probe.variant == variant, max_rows

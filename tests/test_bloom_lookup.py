@@ -7,9 +7,11 @@ Correctness oracle: lookup == read_state filtered to the same keys, on a mor
 table where base + delta files coexist.
 """
 
+import datetime as dt
+
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from clin_variant_etl_spark.engine import CdcPipeline, create_cdc_table
 from clin_variant_etl_spark.lake import table as table_mod
@@ -133,6 +135,30 @@ def test_lookup_plans_without_a_spark_job(spark, bloom_pipe, spark_work):
     with spark_work() as n:
         assert bloom_pipe.lookup([absent]).collect() == []
     assert n.jobs == 0
+
+
+@pytest.mark.parametrize(
+    "key_type, keys",
+    [
+        (T.DateType(), [dt.date(2024, 1, d) for d in range(1, 21)]),
+        (T.DoubleType(), [d / 4 for d in range(-10, 10)]),
+    ],
+)
+def test_lookup_on_non_string_key(spark, tmp_path, spark_work, key_type, keys):
+    """Keys that are neither str nor int reach the bucket probe's local
+    relation as bound parameters: the probe still hashes them as the table
+    stores them (one row per sought key found) and runs no job."""
+    payload = T.StructType([T.StructField("k", key_type), T.StructField("v", T.LongType())])
+    create_cdc_table(str(tmp_path / "t"), payload, key_col="k", n_buckets=8)
+    pipe = CdcPipeline(spark, str(tmp_path / "t"), key_col="k", key_blooms=True)
+    rows = [(i, "I", k, i) for i, k in enumerate(keys)]
+    schema = f"lsn long, op string, k {key_type.simpleString()}, v long"
+    pipe.apply_epoch(spark.createDataFrame(rows, schema), 0)
+    sought = keys[3:6]
+    with spark_work() as n:
+        looked = pipe.lookup(sought)
+    assert n.jobs == 0
+    assert sorted((r["k"], r["v"]) for r in looked.collect()) == [(k, keys.index(k)) for k in sought]
 
 
 def test_compaction_preserves_blooms(spark, tmp_path):
